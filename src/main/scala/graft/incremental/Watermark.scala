@@ -1,8 +1,9 @@
 package graft.incremental
 
-import graft.io.IO
+import graft.io.{IO, Staging}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Watermark control table + incremental discovery (SURVEY §2.1
   * S10/S11, §2.2 K6, §2.10 ST2/ST3).
@@ -21,62 +22,41 @@ import org.apache.spark.sql.functions._
   *
   * Durability contract (the reference's raw overwrite has none:
   * a crash mid-rewrite loses every table's watermark): [[writeTable]]
-  * stages the new CSV beside the live one and swaps it in with
-  * directory renames — `live → old`, `staged → live`, drop `old` —
-  * and [[readTable]] completes an interrupted swap from whichever
-  * side survived. A crash at ANY point leaves either the previous or
-  * the new watermark readable, never a torn/absent table; the
-  * previous value merely re-reads one batch (at-least-once, the safe
-  * direction). SINGLE WRITER assumed — concurrent [[update]]s
-  * read-modify-write and can lose each other's rows, same as the
-  * reference's design; one control table belongs to one scheduler.
-  * Readers participate in recovery ([[readTable]] completes an
-  * interrupted swap), so a reader racing a LIVE writer could roll
-  * back its in-flight swap — serialize reads with writes under that
-  * same scheduler; recovery is for crash remains, not concurrency.
+  * publishes the new CSV through [[Staging.atomicSwap]] — written
+  * beside the live table, swapped in with directory renames — and
+  * [[readTable]] heals a swap that crashed between its renames through
+  * [[Staging.recover]] (roll back to the previous table; a stale side
+  * directory is dropped by the next write). A crash at ANY point leaves
+  * either the previous or the new watermark readable, never a
+  * torn/absent table; the previous value merely re-reads one batch
+  * (at-least-once, the safe direction). SINGLE WRITER assumed —
+  * concurrent [[update]]s read-modify-write and can lose each other's
+  * rows, same as the reference's design; one control table belongs to
+  * one scheduler. Readers participate in recovery, so a reader racing a
+  * LIVE writer could roll back its in-flight swap — serialize reads
+  * with writes under that same scheduler; recovery is for crash
+  * remains, not concurrency.
+  *
+  * The table is stored and read as three STRING columns: the engine
+  * fixes its schema, so nothing is inferred — inference would rewrite
+  * stored values (`007` → `7`, an ISO instant → a local timestamp
+  * string) and cost extra jobs on every read.
   */
 object Watermark {
 
   case class Entry(tableName: String, watermarkValue: String, updateColumn: String)
 
-  private def stagedPath(path: String) = path.stripSuffix("/") + ".__staged__"
-  private def oldPath(path: String)    = path.stripSuffix("/") + ".__old__"
-
-  /** Complete an interrupted [[writeTable]] swap; returns the live
-    * path's FileSystem for reuse. Idempotent, driver-side, O(1). */
-  private def recoverSwap(spark: SparkSession, path: String): Unit = {
-    val f = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(oldPath(path))
-    if (!f.exists(live) && f.exists(old)) {
-      // died between `live → old` and `staged → live`: roll back.
-      // Hadoop rename reports most failures by RETURNING FALSE, not
-      // throwing — an unchecked false here would leave no live table
-      // and the caller none the wiser.
-      require(f.rename(old, live), s"watermark recovery rename failed: $old -> $live")
-    } else if (f.exists(old)) {
-      // died before dropping `old`: the new table is live, finish
-      f.delete(old, true)
-    }
-    // a leftover staged dir is from a crash before the swap began (or
-    // mid-write): never referenced, safe to drop
-    val staged = new org.apache.hadoop.fs.Path(stagedPath(path))
-    if (f.exists(staged)) f.delete(staged, true)
-  }
+  private val Columns = Seq("table_name", "watermark_value", "update_column")
+  private val Schema = StructType(Columns.map(StructField(_, StringType)))
 
   /** Read the control CSV into memory (it is tiny by construction),
-    * completing any interrupted swap first. */
+    * healing a crashed swap first. */
   def readTable(spark: SparkSession, path: String): Seq[Entry] = {
-    recoverSwap(spark, path)
-    IO.readCsv(spark, path)
+    Staging.recover(spark, path)
+    spark.read.option("header", "true").schema(Schema).csv(path)
       .collect()
       .toSeq
-      .map(r =>
-        Entry(
-          r.getAs[Any]("table_name").toString,
-          r.getAs[Any]("watermark_value").toString,
-          r.getAs[Any]("update_column").toString))
+      .map(r => Entry(r.getString(0), r.getString(1), r.getString(2)))
   }
 
   /** S10 — scalar lookup for one table. */
@@ -94,33 +74,14 @@ object Watermark {
       writeTable(spark, path, updated)
     }
 
-  /** Crash-safe overwrite: stage the new CSV, then swap it live with
-    * two directory renames (see the durability contract above). A
-    * plain `SaveMode.Overwrite` deletes the live table before the new
-    * files commit — a crash in that window loses every watermark. */
+  /** Crash-safe overwrite through [[Staging.atomicSwap]] (see the
+    * durability contract above). A plain `SaveMode.Overwrite` deletes
+    * the live table before the new files commit — a crash in that
+    * window loses every watermark. */
   def writeTable(spark: SparkSession, path: String, entries: Seq[Entry]): Unit = {
     import spark.implicits._
-    recoverSwap(spark, path)
-    val staged = stagedPath(path)
-    IO.writeCsv(
-      entries.toDF("table_name", "watermark_value", "update_column"),
-      staged, singleFile = true)
-    val f = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(oldPath(path))
-    // Hadoop rename reports most failures by RETURNING FALSE, not
-    // throwing. Unchecked, a failed `staged -> live` after `live ->
-    // old` succeeded would let the delete below destroy the LAST copy
-    // of every table's watermark — the exact loss this swap protocol
-    // exists to prevent. So: require each rename, and delete `old`
-    // only after confirming the live path actually exists.
-    if (f.exists(live))
-      require(f.rename(live, old), s"watermark swap rename failed: $live -> $old")
-    require(f.rename(new org.apache.hadoop.fs.Path(staged), live),
-      s"watermark swap rename failed: $staged -> $live")
-    require(f.exists(live), s"watermark swap left no live table at $live")
-    f.delete(old, true)
+    Staging.atomicSwap(spark, path)(tmp =>
+      IO.writeCsv(entries.toDF(Columns: _*), tmp, singleFile = true))
   }
 
   /** S2/P2 — incremental scan: rows strictly past the watermark. With a

@@ -336,245 +336,20 @@ object IO {
     * the first fold) and keeps the steady-state read free of the
     * always-on full-manifest distinct the dedup used to cost; and
     * (b) a SECOND concurrent fold fails loudly at acquisition instead
-    * of racing the first's `replaceDir` swap and segment deletes —
-    * the single-fold-at-a-time rule enforced, not documented. The
-    * marker body names the holder; a fold that fails in-process
-    * releases the lock itself (deleting the marker when no duplicate
-    * window exists, downgrading it to `released` when one might), so
-    * only a kill -9'd holder leaves a held marker behind — recovery
-    * is the explicit `takeoverCrashedFold` flag on the compaction
-    * entry points. */
+    * of racing the first's checkpoint swap and segment deletes — the
+    * single-fold-at-a-time rule enforced, not documented. The marker
+    * is a [[Lease]]; a fold that fails in-process releases it itself
+    * (deleting the marker when no duplicate window exists, downgrading
+    * it to [[Lease.Released]] when one might), so only a kill -9'd
+    * holder leaves a held marker behind — recovery is the explicit
+    * `takeoverCrashedFold` flag on the compaction entry points. */
   private[graft] def foldingMarker(manifestDir: String): Path =
     new Path(s"$manifestDir/_FOLDING")
 
-  /** Marker body for a crash window whose fold is NOT running: the
-    * bracket must outlive the failed fold (readers keep deduplicating
-    * the real duplicate window), but the lock must not — the next fold
-    * adopts a released marker without `takeoverCrashedFold`. An EMPTY
-    * marker (written by pre-lock engine versions) is treated the same
-    * way. */
-  private val ReleasedHolder = "released"
-
-  private def foldHolderId: String =
-    s"${java.net.InetAddress.getLocalHost.getHostName}:" +
-      s"pid${java.lang.ProcessHandle.current().pid()}"
-
-  private def readSmallTextFile(f: FileSystem, p: Path): String = {
+  private[io] def readSmallTextFile(f: FileSystem, p: Path): String = {
     val in = f.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
-  }
-
-  /** Whether `create(overwrite = false)` is ATOMIC on this store — a
-    * verified claim then needs no settle/read-back at all (the create
-    * either wins at the namenode or throws). True for HDFS-family
-    * schemes by default; local FS and most object stores are
-    * check-then-act (the round-19 race spec caught RawLocalFileSystem
-    * racing) and stay in verified mode. Override per deployment with
-    * the Hadoop conf key `graft.lock.atomic.create`. */
-  private def lockCreateIsAtomic(f: FileSystem): Boolean =
-    f.getConf.getBoolean("graft.lock.atomic.create",
-      Set("hdfs", "viewfs", "webhdfs", "swebhdfs").contains(f.getScheme))
-
-  /** Settle window for VERIFIED lock claims (Hadoop conf
-    * `graft.lock.settle.ms`, default 50): the claim is safe as long as
-    * no racer's exists-check → create gap exceeds it — microseconds on
-    * a local FS, but on a high-latency object store the create +
-    * read-back round trips themselves approach tens of ms, so size the
-    * window to a few times the store's p99 write latency there (r19
-    * verdict #2: the constant is an assumption about the store, not a
-    * universal truth — stores whose exclusive create is atomic skip
-    * the settle entirely via [[lockCreateIsAtomic]]).
-    *
-    * ==Per-scheme deployment table (r20 ADVICE #7)==
-    * Validated by the `SlowLocalFs` racing-lock spec (25 ms injected
-    * per op, 150 ms settle — exclusion and loud-loser classification
-    * hold at 6× op latency):
-    *
-    * | store                  | exclusive create                          | mode                          | settle sizing |
-    * |------------------------|-------------------------------------------|-------------------------------|---------------|
-    * | hdfs / viewfs / webhdfs| atomic at the namenode                    | atomic fast path (no settle)  | n/a |
-    * | file:// (dev, CI)      | check-then-act; .crc sidecars can read torn| verified + settle            | default 50 ms (a torn-crc first read also settles and re-reads — r22) |
-    * | s3a://                 | historically HEAD-then-PUT (not atomic); newer connectors expose conditional (If-None-Match) PUT | verified + settle by default | 3–5× p99 PUT+GET (typically 200–500 ms); set `graft.lock.atomic.create=true` ONLY after validating the connector's conditional-create on your Hadoop version |
-    * | abfs://                | ETag/If-None-Match create — effectively atomic on current connectors | verified by default; opt in via `graft.lock.atomic.create` after validating | 3–5× p99 write if staying verified |
-    * | gs://                  | generation-match precondition — atomic on current connectors | same opt-in rule as abfs      | same |
-    *
-    * The opt-in default is deliberate: a store wrongly flagged atomic
-    * silently skips the settle and re-opens the r20 adopt race, while
-    * a store wrongly left in verified mode only pays an extra window
-    * per contended claim. */
-  private def lockSettleMs(f: FileSystem): Long =
-    f.getConf.getLong("graft.lock.settle.ms", 50L)
-
-  /** One verified lock-claim attempt: write `token` into `m`, then
-    * prove ownership. `overwrite = false` is the fresh-claim path —
-    * returns false when the marker already exists (IOException from
-    * the exclusive create); on stores where that create is atomic
-    * ([[lockCreateIsAtomic]]) a successful create IS the proof and no
-    * settle is paid. `overwrite = true` claims over an existing
-    * adoptable/crashed marker IN PLACE — the marker never vanishes, so
-    * there is no delete-then-recreate gap in which a racer's fresh
-    * create could acquire cleanly and lose the adopted-window flag
-    * (r19 ADVICE: that gap could un-bracket a prior crash's still-open
-    * duplicate window). An overwrite create always succeeds on every
-    * store, so the overwrite path ALWAYS settles and verifies: racing
-    * claimers all write, the last write wins the content, and exactly
-    * the one that reads its own token back proceeds. */
-  private def tryClaimLock(f: FileSystem, m: Path, token: String, what: String,
-                           overwrite: Boolean): Boolean =
-    try {
-      val out = f.create(m, overwrite)
-      try out.write(
-        (s"""{"holder":"$token",""" +
-          s""""acquired_at_ms":${System.currentTimeMillis()}}""").getBytes("UTF-8"))
-      finally out.close()
-      if (overwrite || !lockCreateIsAtomic(f)) {
-        Thread.sleep(lockSettleMs(f))
-        val back = """"holder"\s*:\s*"([^"]*)"""".r
-          .findFirstMatchIn(readSmallTextFile(f, m)).map(_.group(1))
-        if (!back.contains(token)) throw new IllegalStateException(
-          s"lost the $what-lock race on $m — a concurrent $what " +
-            s"acquired the lock (held by ${back.getOrElse("?")}); retry " +
-            "after it completes")
-      }
-      true
-    } catch { case _: java.io.IOException if !overwrite => false }
-
-  /** Acquire the fold lock: exclusive-create `_FOLDING` with this
-    * process's holder id. Returns true iff the marker PRE-EXISTED as a
-    * released/legacy crash-window bracket that this fold adopted — the
-    * caller must then preserve the bracket on its own failure paths
-    * (round-18 ADVICE: a retry whose write fails must not clear a
-    * marker over a prior fold's still-open duplicate window).
-    *
-    * A marker HELD by another process fails loudly naming the holder:
-    * either a concurrent fold is running (serialize them — the
-    * single-fold-at-a-time contract) or the holder was kill -9'd
-    * mid-fold; after verifying the latter, re-run with
-    * `takeoverCrashedFold = true`. Both adoption and takeover claim
-    * the marker IN PLACE (overwrite + read-back verify) so the bracket
-    * over any real duplicate window is continuously present — two
-    * racing takeovers still resolve to one winner (exactly the racer
-    * that reads its own token back proceeds; the loser fails loudly). */
-  /** Read a lock marker's content for CLASSIFICATION. An EMPTY body is
-    * ambiguous: a legacy/released bracket — or a mid-claim holder on an
-    * atomic-create store, whose 0-length under-construction file is
-    * visible between its create and close (the fresh claim there skips
-    * the settle, so nothing else closes this window). Before treating
-    * empty as adoptable, wait one settle window and re-read: a live
-    * claimer's token becomes visible within it, and the racer then
-    * classifies the marker as HELD instead of overwrite-claiming over a
-    * legitimate owner (r20 ADVICE, high — adopt-on-empty without the
-    * wait broke mutual exclusion on exactly the stores the atomic fast
-    * path serves). */
-  private def readMarkerSettled(f: FileSystem, m: Path): String = {
-    def read(): String =
-      try readSmallTextFile(f, m)
-      catch { case _: java.io.FileNotFoundException => "" } // holder just finished
-    // A ChecksumException on the FIRST read is the checksummed-FS
-    // signature of the same create→close window the empty-body settle
-    // exists for: the racer read the marker between the holder's data
-    // and .crc sidecar writes (observed as a full-suite flake — BOTH
-    // racing bootstraps aborted, an availability hole, not an
-    // exclusion one). Treat it as unsettled: wait the window, re-read.
-    // A checksum error that PERSISTS past the settle is genuine
-    // corruption and stays loud (only the first read is guarded).
-    val txt =
-      try Some(read())
-      catch { case _: org.apache.hadoop.fs.ChecksumException => None }
-    txt match {
-      case Some(t) if t.trim.nonEmpty => t
-      case _ => Thread.sleep(lockSettleMs(f)); read()
-    }
-  }
-
-  private[graft] def acquireFoldLock(f: FileSystem, manifestDir: String,
-                                     takeoverCrashedFold: Boolean): Boolean = {
-    val m = foldingMarker(manifestDir)
-    // the token is per-ACQUISITION (holder id + nonce): see
-    // tryClaimLock for the atomic-create fast path and the verified
-    // settle window the non-atomic stores pay
-    val token = s"$foldHolderId:${java.util.UUID.randomUUID().toString.take(8)}"
-    if (tryClaimLock(f, m, token, "fold", overwrite = false)) return false
-    // marker exists: a released crash-window bracket (adoptable), a
-    // legacy empty marker (same, after the settle re-read rules out a
-    // mid-claim holder), or a holder — live or kill -9'd
-    val txt = readMarkerSettled(f, m)
-    val holder = """"holder"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
-    val adoptable = txt.trim.isEmpty || holder.contains(ReleasedHolder)
-    if (!adoptable && !takeoverCrashedFold)
-      throw new IllegalStateException(
-        s"a fold of $manifestDir is already in flight: _FOLDING is held by " +
-          s"${holder.getOrElse("an unidentified process")} " +
-          s"(${txt.trim}) — one fold at a time per manifest (concurrent folds " +
-          "race the checkpoint swap and each other's segment deletes). If " +
-          "that holder crashed, re-run with takeoverCrashedFold = true; " +
-          "readers keep deduplicating its crash window either way")
-    tryClaimLock(f, m, token, "fold", overwrite = true)
-    true
-  }
-
-  /** Generic verified-claim process lock (the `acquireFoldLock`
-    * pattern without the crash-window bracket semantics): exclusive
-    * `_FOLDING`-style claim on `lockPath`, loud refusal naming the
-    * holder when held, explicit `takeoverCrashed` recovery for a
-    * kill -9'd holder (claimed IN PLACE — no unlocked gap). Callers
-    * release with [[releaseProcessLock]] on EVERY in-process exit path;
-    * unlike the fold lock there is no released/downgraded state — the
-    * guarded operation must be safe to re-run from scratch (the
-    * bootstrap seed is an idempotent overwrite). Returns this
-    * acquisition's TOKEN: the release verifies it, so an operator who
-    * mistakenly took over a LIVE holder cannot have that holder's exit
-    * path delete the usurper's lock out from under it (r20 ADVICE —
-    * the release was token-blind). */
-  private[graft] def acquireProcessLock(spark: SparkSession, lockPath: String,
-                                        what: String,
-                                        takeoverCrashed: Boolean = false): String = {
-    val f = fs(spark, lockPath)
-    f.mkdirs(new Path(lockPath).getParent)
-    val m = new Path(lockPath)
-    val token = s"$foldHolderId:${java.util.UUID.randomUUID().toString.take(8)}"
-    if (tryClaimLock(f, m, token, what, overwrite = false)) return token
-    // empty content settles + re-reads before classifying — a fresh
-    // atomic-create claimer's create→close window must not read as
-    // "finished holder" and get overwrite-claimed (r20 ADVICE, high)
-    val txt = readMarkerSettled(f, m)
-    val holder = """"holder"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
-    if (!takeoverCrashed && txt.trim.nonEmpty)
-      throw new IllegalStateException(
-        s"another $what of this target is already in flight: $m is held by " +
-          s"${holder.getOrElse("an unidentified process")} (${txt.trim}) — " +
-          s"one $what at a time. If that holder crashed, re-run with the " +
-          s"takeover flag; a completed holder deletes the lock itself")
-    tryClaimLock(f, m, token, what, overwrite = true)
-    token
-  }
-
-  /** Delete `lockPath` iff it still holds `token` — the release half of
-    * [[acquireProcessLock]]. A lock that was taken over carries the
-    * usurper's token, so the original holder's exit path is a no-op
-    * instead of unlocking the zone under the new owner. A missing
-    * marker (already released, or the takeover itself completed and
-    * released) is likewise a no-op. */
-  private[graft] def releaseProcessLock(spark: SparkSession, lockPath: String,
-                                        token: String): Unit = {
-    val f = fs(spark, lockPath)
-    val m = new Path(lockPath)
-    val holder =
-      try """"holder"\s*:\s*"([^"]*)"""".r
-        .findFirstMatchIn(readSmallTextFile(f, m)).map(_.group(1))
-      catch { case _: java.io.FileNotFoundException => None }
-    if (holder.contains(token)) f.delete(m, false): Unit
-  }
-
-  /** Downgrade a held marker to a lock-free crash-window bracket:
-    * the fold failed after the point where duplicates may exist (or
-    * adopted a prior crash's window), so readers must keep
-    * deduplicating — but the next fold must not need a takeover. */
-  private def releaseFoldLockKeepWindow(f: FileSystem, manifestDir: String): Unit = {
-    val out = f.create(foldingMarker(manifestDir), true)
-    try out.write(s"""{"holder":"$ReleasedHolder"}""".getBytes("UTF-8"))
-    finally out.close()
   }
 
   /** The accumulated manifest: (path, length), one row per landed file.
@@ -600,8 +375,8 @@ object IO {
     val f = fs(spark, manifestDir)
     val ckpt = manifestCheckpointDir(manifestDir)
     // heal a compaction that crashed between its two renames, or the
-    // checkpoint read below sees a missing dir (replaceDir contract)
-    if (f.exists(new Path(manifestDir))) recoverSwap(spark, ckpt)
+    // checkpoint read below sees a missing dir (Staging.atomicSwap contract)
+    if (f.exists(new Path(manifestDir))) Staging.recover(spark, ckpt)
     val hasCkpt = f.exists(new Path(ckpt))
     val segDirs =
       if (f.exists(new Path(manifestDir)))
@@ -643,14 +418,14 @@ object IO {
     * Crash-safe and concurrent-append-safe: the segment list is
     * snapshotted FIRST, so waves appended while the fold runs are
     * untouched; the checkpoint swaps in via the two-rename
-    * [[replaceDir]] protocol; and a crash between the swap and the
+    * [[Staging.atomicSwap]] protocol; and a crash between the swap and the
     * segment deletes leaves duplicate rows that [[readLandingManifest]]
     * dedups and the next compaction folds away — every window is
     * either invisible or self-healing, never silent loss. ONE fold at
     * a time per manifest is ENFORCED (r18 verdict #1): the `_FOLDING`
     * marker doubles as an exclusive-create lock held for the whole
     * fold, so a concurrent second fold fails loudly naming the holder
-    * instead of racing [[replaceDir]]'s fixed swap tmp names and the
+    * instead of racing [[Staging.atomicSwap]]'s fixed swap tmp names and the
     * winner's segment deletes; a kill -9'd holder is recovered with
     * `takeoverCrashedFold = true` (in-process failures release the
     * lock themselves, preserving the bracket over any real duplicate
@@ -1057,22 +832,27 @@ object IO {
     val f = fs(spark, manifestDir)
     val ckpt = manifestCheckpointDir(manifestDir)
     if (!f.exists(new Path(manifestDir))) return (0, 0L)
-    recoverSwap(spark, ckpt)
+    Staging.recover(spark, ckpt)
     // the lock is the marker, acquired BEFORE the segment snapshot:
     // two concurrent folds would otherwise snapshot overlapping
-    // segment sets and race replaceDir on the checkpoint (one swap
+    // segment sets and race the checkpoint swap (one swap
     // wins, the other can resurrect folded rows or delete segments the
     // winner's checkpoint never absorbed). Readers pay a dedup while
     // ANY fold is in flight — a fold is cadence work (daily), so the
     // steady-state read stays shuffle-free, and creating the bracket
     // this early only SHRINKS the documented reader-races-fold-start
     // transient.
-    val adoptedWindow = acquireFoldLock(f, manifestDir, takeoverCrashedFold)
+    // a pre-existing marker (a released bracket, a legacy empty one, or
+    // a crashed holder's on takeover) may bracket a prior crash's
+    // still-open duplicate window: this fold's failure paths must then
+    // keep it (round-18 ADVICE)
+    val lease = Lease.claim(f, foldingMarker(manifestDir), "fold",
+      takeoverCrashedFold, "takeoverCrashedFold")
     // windowOpen = "duplicate rows may exist between checkpoint and
     // live segments": true from acquisition if we adopted a prior
     // crash's bracket, true from just before this fold's swap until
     // its last segment delete
-    var windowOpen = adoptedWindow
+    var windowOpen = lease.preexisting
     var done = false
     var out = (0, 0L)
     try {
@@ -1095,7 +875,7 @@ object IO {
           val folded =
             (if (hasCkpt) spark.read.parquet(ckpt).unionByName(segRows)
              else segRows).distinct()
-          replaceDir(spark, ckpt) { tmp =>
+          Staging.atomicSwap(spark, ckpt) { tmp =>
             // a failure in the WRITE phase (the failure-prone part — a
             // distributed parquet job) provably precedes the swap: the
             // live checkpoint lacks the folded rows, so THIS fold
@@ -1125,16 +905,11 @@ object IO {
         // release on the FAILURE path here (suppressing cleanup errors
         // onto the original), success path releases below — a finally
         // can't distinguish the two without re-throw gymnastics
-        try {
-          if (windowOpen) releaseFoldLockKeepWindow(f, manifestDir)
-          else f.delete(foldingMarker(manifestDir), false): Unit
-        } catch { case c: Throwable => e.addSuppressed(c) }
+        try Lease.release(f, lease, keepReleased = windowOpen)
+        catch { case c: Throwable => e.addSuppressed(c) }
         throw e
     } finally {
-      if (done) {
-        if (windowOpen) releaseFoldLockKeepWindow(f, manifestDir)
-        else f.delete(foldingMarker(manifestDir), false): Unit
-      }
+      if (done) Lease.release(f, lease, keepReleased = windowOpen)
     }
   }
 
@@ -1275,56 +1050,12 @@ object IO {
         org.apache.spark.sql.types.BinaryType, nullable = false))))
   }
 
-  /** Restore a directory from a half-completed [[replaceDir]] swap: a
-    * crash between the two renames leaves the data at `path.__swap_old`
-    * and nothing at `path`. Any reader of a swap-managed table calls
-    * this first (replaceDir itself does). No-op when `path` exists. */
-  def recoverSwap(spark: SparkSession, path: String): Unit = {
-    val f = fs(spark, path)
-    val old = new Path(s"$path.__swap_old")
-    if (!f.exists(new Path(path)) && f.exists(old)) {
-      // two readers healing concurrently both pass the exists check;
-      // the loser's rename returns false AFTER the winner healed — a
-      // failed rename is only an error if the path is STILL missing
-      val renamed = f.rename(old, new Path(path))
-      require(renamed || f.exists(new Path(path)),
-        s"recovery rename $old -> $path failed")
-    }
-  }
-
-  /** Crash-safe directory replacement: `write` produces the new
-    * contents into a tmp dir BESIDE the target, then the swap is
-    * rename-only — new beside, old aside, new in, old gone. A crash at
-    * any point leaves a complete copy at `path` or `path.__swap_old`
-    * (never a window with neither, which delete-then-rename has), and
-    * [[recoverSwap]] restores the latter on the next access. Hadoop
-    * rename reports failure by RETURNING false, so every rename is
-    * checked — an unflagged failed rename would nest tmp inside the
-    * still-existing target. Shared by compact() and the streaming
-    * upsert sink so the crash-window reasoning lives in one place. */
-  def replaceDir(spark: SparkSession, path: String)(write: String => Unit): Unit = {
-    val f = fs(spark, path)
-    val tmp = s"$path.__swap_tmp"
-    val old = s"$path.__swap_old"
-    def mv(src: String, dst: String): Unit =
-      require(f.rename(new Path(src), new Path(dst)), s"rename $src -> $dst failed")
-    recoverSwap(spark, path)
-    f.delete(new Path(tmp), true)
-    write(tmp)
-    // a stale old copy can only exist here if a prior swap crashed
-    // AFTER its swap-in (path is live) — safe to drop before our swap
-    f.delete(new Path(old), true)
-    if (f.exists(new Path(path))) mv(path, old)
-    mv(tmp, path)
-    f.delete(new Path(old), true)
-  }
-
   /** K11 — small-file compaction: rewrite a table directory into
     * ~`targetBytes`-sized files. The small-files problem is the classic
     * large-pipeline failure mode — a micro-batch sink drips thousands of
     * KB-scale files per day and every downstream scan pays a task (and a
     * namenode round-trip) per file. One distributed read → repartition to
-    * ceil(bytes/target) → rewrite; the swap runs through [[replaceDir]],
+    * ceil(bytes/target) → rewrite; the swap runs through [[Staging.atomicSwap]],
     * so a crash at any point leaves a complete directory recoverable.
     * Returns (filesBefore, filesAfter).
     *
@@ -1340,7 +1071,7 @@ object IO {
     // a crash between a prior swap's renames leaves the data at
     // __swap_old — restore BEFORE listing, or the size stats and the
     // flat-dir guard run against an empty directory
-    recoverSwap(spark, path)
+    Staging.recover(spark, path)
     // Partition dirs are 'col=value' — their names contain '=' even
     // when the column is hidden-prefixed (st12 writes '__bucket=N'),
     // so the partition check keys on '='; hidden system entries
@@ -1361,7 +1092,7 @@ object IO {
     val before = dataFiles(path)
     val totalBytes = before.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    replaceDir(spark, path) { tmp =>
+    Staging.atomicSwap(spark, path) { tmp =>
       spark.read.parquet(path).repartition(nOut)
         .write.mode(SaveMode.Overwrite).parquet(tmp)
     }

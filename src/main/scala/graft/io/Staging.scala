@@ -3,11 +3,15 @@ package graft.io
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Crash-safe ATOMIC overwrite of a staged-artifact directory — the
-  * [[graft.incremental.Watermark.writeTable]] two-rename swap (K6)
-  * generalized for the model/index artifacts of the
-  * train-once/serve-many families (PQ/IVF indexes, SemDeDup cells,
-  * BPE/DSIR/NB models, band/bucket/fingerprint tables).
+/** Crash-safe ATOMIC overwrite of a directory — the engine's one
+  * rename-swap. Every rewrite of a live directory goes through it: the
+  * model/index artifacts of the train-once/serve-many families (PQ/IVF
+  * indexes, SemDeDup cells, BPE/DSIR/NB models, band/bucket/fingerprint
+  * tables), the watermark control table
+  * ([[graft.incremental.Watermark.writeTable]], K6), [[IO.compact]], the
+  * landing-manifest fold's checkpoint, the streaming upsert sink and
+  * the SemDeDup norm stamp; their readers (the manifest bootstrap
+  * included) heal through [[recover]].
   *
   * Why plain `SaveMode.Overwrite` is not enough for a SHARED artifact:
   * it deletes the live directory before the new job's files commit, so
@@ -25,8 +29,8 @@ import org.apache.spark.sql.SparkSession
   *   2. `build` writes the COMPLETE artifact under a tmp dir BESIDE the target;
   *   3. swap: live → old-copy, tmp → live — each rename
   *      `require`d, because Hadoop rename reports most failures by
-  *      RETURNING FALSE (the Watermark lesson: an unchecked failed
-  *      second rename would let step 4 delete the last copy);
+  *      RETURNING FALSE (an unchecked failed second rename would let
+  *      step 4 delete the last copy);
   *   4. delete the old copy.
   *
   * A reader sees the complete previous artifact up to the instant of
@@ -107,18 +111,31 @@ object Staging {
         s"$PublishModeKey must be 'rename' or 'versioned', got '$other'")
     }
 
-  /** Build-into-staging then swap live. `build` receives the staging
-    * directory and must leave the complete artifact there; on any
-    * build failure the live artifact is untouched. Delegates to
-    * [[IO.replaceDir]] — compact(), the streaming upsert sink, and
-    * every staged-artifact builder share ONE implementation of the
-    * swap protocol (tmp at `<path>.__swap_tmp`, the previous build at
-    * `<path>.__swap_old` during the window). The watermark control
-    * table ([[graft.incremental.Watermark.writeTable]]) keeps its own
-    * specialization: its on-disk staged/old naming predates this
-    * helper and is part of that table's recovery contract. */
-  def atomicSwap(spark: SparkSession, path: String)(build: String => Unit): Unit =
-    IO.replaceDir(spark, path)(build)
+  /** Build-into-staging then swap live (the protocol above). `build`
+    * receives the staging directory `<path>.__swap_tmp` and must leave
+    * the complete artifact there; on any build failure the live
+    * artifact is untouched. During the swap the previous build sits at
+    * `<path>.__swap_old`, so a crash at any point leaves a complete
+    * copy at one of the two — never a window with neither, which
+    * delete-then-rename has. A trailing `/` on `path` is ignored: the
+    * side directories must sit beside the target, never inside it. */
+  def atomicSwap(spark: SparkSession, path: String)(build: String => Unit): Unit = {
+    val live = path.stripSuffix("/")
+    val f = fs(spark, live)
+    val tmp = s"$live.__swap_tmp"
+    val old = s"$live.__swap_old"
+    def mv(src: String, dst: String): Unit =
+      require(f.rename(new Path(src), new Path(dst)), s"rename $src -> $dst failed")
+    recover(spark, live)
+    f.delete(new Path(tmp), true)
+    build(tmp)
+    // a stale old copy can only exist here if a prior swap crashed
+    // AFTER its swap-in (live exists) — safe to drop before our swap
+    f.delete(new Path(old), true)
+    if (f.exists(new Path(live))) mv(live, old)
+    mv(tmp, live)
+    f.delete(new Path(old), true)
+  }
 
   /** Heal a crash that died between the two renames — the only state
     * with no live artifact is (live missing, `__swap_old` present).
@@ -132,9 +149,22 @@ object Staging {
     * the old artifact before the builder's second rename, which then
     * fails its `require` loudly — the live artifact is the intact
     * previous build, nothing is lost, and retrying the build succeeds.
-    * A failed-loud build beats readers crashing on a missing artifact. */
-  def recover(spark: SparkSession, path: String): Unit =
-    IO.recoverSwap(spark, path)
+    * A failed-loud build beats readers crashing on a missing artifact.
+    * Recovery only ever rolls BACK: a stale `__swap_old` beside a live
+    * path, or a leftover `__swap_tmp`, is inert until the next
+    * [[atomicSwap]] drops it. */
+  def recover(spark: SparkSession, path: String): Unit = {
+    val live = new Path(path.stripSuffix("/"))
+    val old = new Path(s"$live.__swap_old")
+    val f = fs(spark, path)
+    if (!f.exists(live) && f.exists(old)) {
+      // two readers healing concurrently both pass the exists check;
+      // the loser's rename returns false AFTER the winner healed — a
+      // failed rename is only an error if the path is STILL missing
+      require(f.rename(old, live) || f.exists(live),
+        s"recovery rename $old -> $live failed")
+    }
+  }
 
   // ---- object-store-safe versioned publish (round-14 verdict item 1) ----
   //

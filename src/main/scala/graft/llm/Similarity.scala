@@ -395,9 +395,9 @@ object Similarity {
       // all-unit members (conservative), never a true stamp over raw
       // ones. Serving stays ungated either way (cosine end to end).
       // heal a downgrade that crashed between its swap renames before
-      // probing the stamp (replaceDir contract — any reader of a
-      // swap-managed dir recovers first)
-      graft.io.IO.recoverSwap(spark, s"$live/norm_params")
+      // probing the stamp (Staging.atomicSwap contract — any reader of
+      // a swap-managed dir recovers first)
+      graft.io.Staging.recover(spark, s"$live/norm_params")
       val stampPath = new org.apache.hadoop.fs.Path(s"$live/norm_params")
       if (fs.exists(stampPath) && !isUnitNormQ(v)) {
         val cur = spark.read.parquet(stampPath.toString).collect().head
@@ -408,9 +408,9 @@ object Similarity {
           // window would leave norm_params missing — worse than either
           // stamp value (provenance silently becomes "no stamp") and a
           // transient failure for concurrent provenance readers
-          // (round-17 ADVICE). With replaceDir a crash leaves a
+          // (round-17 ADVICE). With atomicSwap a crash leaves a
           // complete copy at the path or at .__swap_old, healed above.
-          graft.io.IO.replaceDir(spark, stampPath.toString) { tmp =>
+          graft.io.Staging.atomicSwap(spark, stampPath.toString) { tmp =>
             Seq((false, cur.getAs[Int]("num_cells"), cur.getAs[Int]("iters")))
               .toDF("unit_norm", "num_cells", "iters")
               .coalesce(1).write.mode("overwrite").parquet(tmp)

@@ -655,11 +655,11 @@ object Streams {
     * `upsert`, whose last-writer-wins source precedence would make the
     * end state depend on batch order).
     *
-    * The rewrite runs through [[graft.io.IO.replaceDir]] — the base
+    * The rewrite runs through [[graft.io.Staging.atomicSwap]] — the base
     * MUST stay intact while the new table writes, since Spark reads it
     * lazily DURING the write (an in-place overwrite would consume its
     * own half-deleted input) — and each batch first calls
-    * [[graft.io.IO.recoverSwap]] so a crash between the swap renames
+    * [[graft.io.Staging.recover]] so a crash between the swap renames
     * (or a checkpoint replay after one) resumes from the preserved old
     * copy instead of silently rebuilding from empty.
     *
@@ -689,14 +689,14 @@ object Streams {
     val q = src.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.toDF()
-        graft.io.IO.recoverSwap(spark, tablePath)
+        graft.io.Staging.recover(spark, tablePath)
         val merged =
           if (fs.exists(new Path(tablePath)))
             graft.ops.Merge.keepLatest(
               spark.read.parquet(tablePath), b, keys, order.map(col))
           else
             graft.ops.Merge.keepLatest(b.limit(0), b, keys, order.map(col))
-        graft.io.IO.replaceDir(spark, tablePath) { tmp =>
+        graft.io.Staging.atomicSwap(spark, tablePath) { tmp =>
           merged.write.mode("overwrite").parquet(tmp)
         }
         ()
@@ -902,7 +902,7 @@ object Streams {
     * deletes the partial state and the seed overwrite is idempotent.
     * One bootstrap at a time PER CONSUMER ID, enforced (r19 verdict
     * #6): the join holds an exclusive `.bootstrap_<id>.lock` under
-    * `_consumers/` (the fold lock's verified-claim pattern), so two
+    * `_consumers/` (a [[graft.io.Lease]], like the fold's), so two
     * operators racing the same join fail loudly instead of
     * interleaving reset/seed/sentinel; the lock releases on every
     * in-process exit, and a kill -9'd join is recovered with
@@ -943,7 +943,7 @@ object Streams {
     // ingest the partial corpus the guard exists to refuse
     // (round-18 review finding — every other checkpoint toucher
     // recovers before acting)
-    graft.io.IO.recoverSwap(spark, ckptTablePath)
+    graft.io.Staging.recover(spark, ckptTablePath)
     val hasFolded = mf.exists(ckptTable)
     // a drain whose STREAM checkpoint has no committed offsets lists
     // only LIVE segments from scratch, so starting one against a
@@ -1041,9 +1041,10 @@ object Streams {
     //      past this consumer's pre-registered mark; the re-check
     //      converts even that from silent loss into a loud
     //      re-bootstrap instruction.
-    // this acquisition's lock token: the finally-release verifies it,
-    // so a takeover's new owner is never unlocked by the old holder
-    var bootstrapLockToken: Option[String] = None
+    // this acquisition's lease: the finally-release verifies its
+    // token, so a takeover's new owner is never unlocked by the old
+    // holder
+    var bootstrapLease: Option[graft.io.Lease.Claim] = None
     if (bootstrapFromCheckpoint) {
       require(reset,
         "bootstrapFromCheckpoint joins a NEW consumer (reset = true); an " +
@@ -1059,15 +1060,15 @@ object Streams {
       // the reset (one's deleteDir landing mid-way through the other's
       // drain), the seed overwrite, the mark, and the sentinel — each
       // step is individually idempotent/atomic, but the interleavings
-      // are not worth certifying one by one. Same verified-claim
-      // pattern as the fold lock; released on every in-process exit
-      // path below. The mark pre-registration happens INSIDE the lock
-      // (still before the fingerprint capture and seed, which is what
-      // holds sibling consumer-aware folds back through the drain) so
-      // racing joins never write one mark file concurrently.
-      bootstrapLockToken = Some(graft.io.IO.acquireProcessLock(spark,
-        s"$manifestDir/_consumers/.bootstrap_${consumerId.get}.lock",
-        "bootstrap", takeoverCrashedBootstrap))
+      // are not worth certifying one by one. The same lease as the
+      // fold lock; released on every in-process exit path below. The
+      // mark pre-registration happens INSIDE the lock (still before
+      // the fingerprint capture and seed, which is what holds sibling
+      // consumer-aware folds back through the drain) so racing joins
+      // never write one mark file concurrently.
+      bootstrapLease = Some(graft.io.Lease.claim(mf,
+        new Path(s"$manifestDir/_consumers/.bootstrap_${consumerId.get}.lock"),
+        "bootstrap", takeoverCrashedBootstrap, "takeoverCrashedBootstrap"))
     }
     try {
     if (bootstrapFromCheckpoint) {
@@ -1187,9 +1188,7 @@ object Streams {
       // fold lock); only a kill -9 leaves the lock for takeover. The
       // release is token-verified: if this acquisition was itself taken
       // over by an operator, the lock now belongs to them and stays.
-      for (tok <- bootstrapLockToken)
-        graft.io.IO.releaseProcessLock(spark,
-          s"$manifestDir/_consumers/.bootstrap_${consumerId.get}.lock", tok)
+      bootstrapLease.foreach(graft.io.Lease.release(mf, _))
     }
   }
 

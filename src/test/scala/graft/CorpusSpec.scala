@@ -66,7 +66,7 @@ class CorpusSpec extends SparkSpec {
     assert(got == "mail <EMAIL> now 123 and <NUM> id<NUM>end")
   }
 
-  test("replaceDir swap survives a crash between renames via recoverSwap") {
+  test("Staging swap survives a crash between renames via Staging.recover") {
     val p = s"${sys.props("java.io.tmpdir")}/graft_test_swap"
     val f = new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -77,10 +77,10 @@ class CorpusSpec extends SparkSpec {
     assert(f.rename(new org.apache.hadoop.fs.Path(p),
       new org.apache.hadoop.fs.Path(s"$p.__swap_old")))
     assert(!f.exists(new org.apache.hadoop.fs.Path(p)))
-    graft.io.IO.recoverSwap(spark, p)
+    graft.io.Staging.recover(spark, p)
     assert(spark.read.parquet(p).count() == 10L)
-    // and a subsequent replaceDir over the recovered table works
-    graft.io.IO.replaceDir(spark, p) { tmp =>
+    // and a subsequent swap over the recovered table works
+    graft.io.Staging.atomicSwap(spark, p) { tmp =>
       spark.range(20).write.mode("overwrite").parquet(tmp)
     }
     assert(spark.read.parquet(p).count() == 20L)

@@ -62,28 +62,61 @@ class OperatorsSpec extends SparkSpec {
     import org.apache.hadoop.fs.Path
     val base = s"${sys.props("java.io.tmpdir")}/graft_test_wm_swap"
     val f = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.delete(new Path(base), true)
     val csv = s"$base/wm"
-    Watermark.writeTable(spark, csv, Seq(Watermark.Entry("t", "100", "v")))
+    // a trailing slash names the same table: the swap's side
+    // directories sit beside it either way, never inside it
+    for (path <- Seq(csv, s"$csv/")) {
+      f.delete(new Path(base), true)
+      Watermark.writeTable(spark, path, Seq(Watermark.Entry("t", "100", "v")))
 
-    // crash between `live -> old` and `staged -> live`: only old exists
-    f.rename(new Path(csv), new Path(s"$csv.__old__"))
-    assert(Watermark.lookup(spark, csv, "t").get.watermarkValue == "100",
-      "rollback from __old__ failed")
-    assert(f.exists(new Path(csv)) && !f.exists(new Path(s"$csv.__old__")))
+      // crash between `live -> old` and `tmp -> live`: only old exists
+      f.rename(new Path(csv), new Path(s"$csv.__swap_old"))
+      assert(Watermark.lookup(spark, path, "t").get.watermarkValue == "100",
+        "rollback from __swap_old failed")
+      assert(f.exists(new Path(csv)) && !f.exists(new Path(s"$csv.__swap_old")))
 
-    // crash after `staged -> live` but before dropping old: both exist,
-    // live (the NEWER table) must win
-    Watermark.writeTable(spark, csv, Seq(Watermark.Entry("t", "200", "v")))
-    f.mkdirs(new Path(s"$csv.__old__"))
-    assert(Watermark.lookup(spark, csv, "t").get.watermarkValue == "200")
-    assert(!f.exists(new Path(s"$csv.__old__")))
+      // crash after `tmp -> live` but before dropping old: both exist,
+      // live (the NEWER table) must win
+      Watermark.writeTable(spark, path, Seq(Watermark.Entry("t", "200", "v")))
+      f.mkdirs(new Path(s"$csv.__swap_old"))
+      assert(Watermark.lookup(spark, path, "t").get.watermarkValue == "200")
 
-    // crash mid-stage: leftover __staged__ is dropped, live untouched
-    f.mkdirs(new Path(s"$csv.__staged__"))
-    Watermark.update(spark, csv, "t", Some("300"))
-    assert(Watermark.lookup(spark, csv, "t").get.watermarkValue == "300")
-    assert(!f.exists(new Path(s"$csv.__staged__")))
+      // crash mid-stage: leftover __swap_tmp, live untouched. The next
+      // write (this update) drops both stale side directories —
+      // readers only ever roll back
+      f.mkdirs(new Path(s"$csv.__swap_tmp"))
+      Watermark.update(spark, path, "t", Some("300"))
+      assert(Watermark.lookup(spark, path, "t").get.watermarkValue == "300")
+      assert(!f.exists(new Path(s"$csv.__swap_old")))
+      assert(!f.exists(new Path(s"$csv.__swap_tmp")))
+      assert(f.listStatus(new Path(csv)).forall(!_.isDirectory),
+        s"nothing may be staged inside the live table ($path)")
+    }
+  }
+
+  test("K6: watermark table round-trips stored values exactly (fixed string schema)") {
+    val csv = s"${sys.props("java.io.tmpdir")}/graft_test_wm_roundtrip"
+    graft.streaming.Streams.deleteDir(spark, csv)
+    val iso = "2024-01-01T12:00:00.123456Z"
+    // single-row tables: nothing for an inferred type to agree with
+    Watermark.writeTable(spark, csv, Seq(Watermark.Entry("codes", "007", "code")))
+    assert(Watermark.lookup(spark, csv, "codes").get.watermarkValue == "007")
+    Watermark.writeTable(spark, csv, Seq(Watermark.Entry("clicks", iso, "ts")))
+    assert(Watermark.lookup(spark, csv, "clicks").get.watermarkValue == iso)
+    // several tables: one table's value must not depend on another's
+    val all = Seq(Watermark.Entry("codes", "0050", "code"),
+      Watermark.Entry("clicks", iso, "ts"), Watermark.Entry("ids", "100", "id"))
+    Watermark.writeTable(spark, csv, all)
+    assert(Watermark.readTable(spark, csv) == all)
+    // a string update column compares against the stored literal
+    val codes = Seq("0010", "0060", "0100").toDF("code")
+    val wm = Watermark.lookup(spark, csv, "codes").get
+    val batch = Watermark.incrementalScan(codes, wm.updateColumn, wm.watermarkValue)
+    assert(batch.as[String].collect().toSeq.sorted == Seq("0060", "0100"))
+    // update rewrites one row and leaves every other value as stored
+    Watermark.update(spark, csv, "codes", Watermark.nextWatermark(batch, "code"))
+    assert(Watermark.readTable(spark, csv) ==
+      all.map(e => if (e.tableName == "codes") e.copy(watermarkValue = "0100") else e))
   }
 
   test("S11: file discovery honors yyyyMMddHHmmss boundaries") {
@@ -388,44 +421,51 @@ class OperatorsSpec extends SparkSpec {
     val dir = s"${sys.props("java.io.tmpdir")}/graft_test_atomic_swap"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(dir, dir + ".__swap_old", dir + ".__swap_tmp").foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
     def readV(): Seq[Int] = spark.read.parquet(dir).as[Int].collect().toSeq
-    graft.io.Staging.atomicSwap(spark, dir) { tmp =>
-      Seq(1).toDF("v").write.parquet(tmp)
-    }
-    assert(readV() == Seq(1))
-    // a rebuild that fails AFTER writing partial staged content leaves
-    // the live artifact byte-identical (the SaveMode.Overwrite hazard
-    // this helper exists to remove: overwrite deletes live FIRST)
-    intercept[RuntimeException] {
-      graft.io.Staging.atomicSwap(spark, dir) { tmp =>
-        Seq(2).toDF("v").write.parquet(tmp)
-        throw new RuntimeException("build died mid-rebuild")
+    // a trailing slash names the same artifact: the side directories
+    // must sit beside it, never inside it
+    for (target <- Seq(dir, s"$dir/")) {
+      Seq(dir, dir + ".__swap_old", dir + ".__swap_tmp").foreach(p =>
+        fs.delete(new org.apache.hadoop.fs.Path(p), true))
+      graft.io.Staging.atomicSwap(spark, target) { tmp =>
+        Seq(1).toDF("v").write.parquet(tmp)
       }
+      assert(readV() == Seq(1))
+      // a rebuild that fails AFTER writing partial staged content leaves
+      // the live artifact byte-identical (the SaveMode.Overwrite hazard
+      // this helper exists to remove: overwrite deletes live FIRST)
+      intercept[RuntimeException] {
+        graft.io.Staging.atomicSwap(spark, target) { tmp =>
+          Seq(2).toDF("v").write.parquet(tmp)
+          throw new RuntimeException("build died mid-rebuild")
+        }
+      }
+      assert(readV() == Seq(1), "failed rebuild must not touch the live artifact")
+      // a successful rebuild replaces the whole artifact
+      graft.io.Staging.atomicSwap(spark, target) { tmp =>
+        Seq(3).toDF("v").write.parquet(tmp)
+      }
+      assert(readV() == Seq(3))
+      // crash between the two renames leaves (live missing, __swap_old
+      // present) — the ONLY lossy-looking state — and both the next
+      // swap and an explicit recover() heal it
+      assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
+        new org.apache.hadoop.fs.Path(dir + ".__swap_old")))
+      graft.io.Staging.recover(spark, target)
+      assert(readV() == Seq(3), "recover must restore the pre-crash artifact")
+      assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
+        new org.apache.hadoop.fs.Path(dir + ".__swap_old")))
+      graft.io.Staging.atomicSwap(spark, target) { tmp =>
+        Seq(4).toDF("v").write.parquet(tmp)
+      }
+      assert(readV() == Seq(4))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".__swap_old")) &&
+        !fs.exists(new org.apache.hadoop.fs.Path(dir + ".__swap_tmp")),
+        "swap must clean up its side directories")
+      assert(fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+        .forall(!_.getPath.getName.startsWith(".__swap")),
+        s"nothing may be staged inside the live artifact ($target)")
     }
-    assert(readV() == Seq(1), "failed rebuild must not touch the live artifact")
-    // a successful rebuild replaces the whole artifact
-    graft.io.Staging.atomicSwap(spark, dir) { tmp =>
-      Seq(3).toDF("v").write.parquet(tmp)
-    }
-    assert(readV() == Seq(3))
-    // crash between the two renames leaves (live missing, __swap_old
-    // present) — the ONLY lossy-looking state — and both the next
-    // swap and an explicit recover() heal it
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + ".__swap_old")))
-    graft.io.Staging.recover(spark, dir)
-    assert(readV() == Seq(3), "recover must restore the pre-crash artifact")
-    assert(fs.rename(new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + ".__swap_old")))
-    graft.io.Staging.atomicSwap(spark, dir) { tmp =>
-      Seq(4).toDF("v").write.parquet(tmp)
-    }
-    assert(readV() == Seq(4))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".__swap_old")) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(dir + ".__swap_tmp")),
-      "swap must clean up its side directories")
   }
 
   test("Staging.publishVersioned: manifest flips readers atomically; crashes leave a complete live artifact; GC never touches it") {
@@ -1006,7 +1046,8 @@ class OperatorsSpec extends SparkSpec {
         })
         th.start()
         val adopted =
-          try graft.io.IO.acquireFoldLock(fs, man, takeoverCrashedFold = needTakeover)
+          try graft.io.Lease.claim(fs, marker, "fold", needTakeover,
+            "takeoverCrashedFold").preexisting
           finally { stop.set(true); th.join() }
         assert(adopted, "a pre-existing marker must report adoptedWindow = true")
         assert(!vanished.get(),
@@ -1047,7 +1088,7 @@ class OperatorsSpec extends SparkSpec {
     val man = s"${sys.props("java.io.tmpdir")}/graft_test_emptymarker_man"
     val fs = new Path(man).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // set the settle on the FS instance's OWN conf — the object
-    // lockSettleMs actually reads. The cached FileSystem can carry a
+    // the lease's settle actually reads. The cached FileSystem can carry a
     // COPY of the session's hadoopConfiguration (whichever conf first
     // created it), and setting the session conf then silently leaves
     // the default 50 ms window, turning the 150 ms writer below into a
@@ -1075,7 +1116,7 @@ class OperatorsSpec extends SparkSpec {
       })
       writer.start()
       val e = intercept[IllegalStateException] {
-        graft.io.IO.acquireFoldLock(fs, man, takeoverCrashedFold = false)
+        graft.io.Lease.claim(fs, marker, "fold", false, "takeoverCrashedFold")
       }
       writer.join()
       assert(e.getMessage.contains("livehost:pid7"),
@@ -1084,7 +1125,8 @@ class OperatorsSpec extends SparkSpec {
       // a marker still empty AFTER the settle is a legacy/released
       // bracket and adopts as before
       fs.create(marker, true).close()
-      assert(graft.io.IO.acquireFoldLock(fs, man, takeoverCrashedFold = false),
+      assert(graft.io.Lease.claim(fs, marker, "fold", false,
+        "takeoverCrashedFold").preexisting,
         "an empty-after-settle marker must adopt as a legacy bracket")
       fs.delete(marker, false)
       // same guard on the generic process lock: empty-but-live refuses
@@ -1098,28 +1140,34 @@ class OperatorsSpec extends SparkSpec {
       })
       writer2.start()
       val e2 = intercept[IllegalStateException] {
-        graft.io.IO.acquireProcessLock(spark, lockP, "bootstrap")
+        graft.io.Lease.claim(fs, new Path(lockP), "bootstrap", false, "takeover")
       }
       writer2.join()
       assert(e2.getMessage.contains("livehost:pid8"), e2.getMessage)
       fs.delete(new Path(lockP), false)
     } finally conf.unset("graft.lock.settle.ms")
     // 2. Token-verified release: an operator who mistakenly takes over
-    // a LIVE process lock now owns it; the original holder's release
-    // must be a no-op, not unlock the zone under the usurper.
-    val lockP = s"$man/.bootstrap_y.lock"
-    val t1 = graft.io.IO.acquireProcessLock(spark, lockP, "bootstrap")
-    val t2 = graft.io.IO.acquireProcessLock(spark, lockP, "bootstrap",
-      takeoverCrashed = true)
-    assert(t1 != t2)
-    graft.io.IO.releaseProcessLock(spark, lockP, t1)
-    assert(fs.exists(new Path(lockP)),
-      "the old holder's release must not delete the usurper's lock")
-    graft.io.IO.releaseProcessLock(spark, lockP, t2)
-    assert(!fs.exists(new Path(lockP)),
-      "the current owner's release deletes the lock")
-    // releasing an already-released lock is a no-op
-    graft.io.IO.releaseProcessLock(spark, lockP, t2)
+    // a LIVE lock now owns it; the original holder's release must be a
+    // no-op, not unlock the zone under the usurper — on the bootstrap
+    // lock and on the fold's _FOLDING alike, whose release may also
+    // downgrade the marker to `released` instead of deleting it
+    for ((lock, what) <- Seq(new Path(s"$man/.bootstrap_y.lock") -> "bootstrap",
+                             marker -> "fold")) {
+      val t1 = graft.io.Lease.claim(fs, lock, what, false, "takeover")
+      val t2 = graft.io.Lease.claim(fs, lock, what, true, "takeover")
+      assert(t1.token != t2.token)
+      graft.io.Lease.release(fs, t1)
+      graft.io.Lease.release(fs, t1, keepReleased = true)
+      assert(graft.io.Lease.holderOf(
+        scala.io.Source.fromInputStream(fs.open(lock), "UTF-8").mkString)
+        .contains(t2.token),
+        s"the old holder's release must leave the usurper's $what lock as it is")
+      graft.io.Lease.release(fs, t2)
+      assert(!fs.exists(lock), s"the current owner's release deletes the $what lock")
+      // releasing an already-released lock is a no-op
+      graft.io.Lease.release(fs, t2)
+      assert(!fs.exists(lock))
+    }
   }
 
   test("a torn checksummed marker settles and re-reads instead of aborting the racer (r22)") {
@@ -1135,16 +1183,19 @@ class OperatorsSpec extends SparkSpec {
     // (bypassing the checksum layer), so the sidecar no longer matches
     // — the reader sees ChecksumException ("exp: N got: M"), exactly
     // the full-suite race where BOTH racing bootstraps aborted
-    def tearCrc(): Unit = {
+    def tearCrc(
+        body: String = """{"holder":"livehost:pid9","acquired_at_ms":1}""",
+        torn: String = """{"holder":"otherhost:pid0","acquired_at_ms":2}"""): Unit = {
       val o = fs.create(new Path(lockP), true)
-      o.write("""{"holder":"livehost:pid9","acquired_at_ms":1}""".getBytes("UTF-8"))
+      o.write(body.getBytes("UTF-8"))
       o.close()
       assert(new java.io.File(s"$man/..bootstrap_crc.lock.crc").exists(),
         "expected a checksum sidecar on the local FS")
       val raw = new java.io.FileOutputStream(s"$man/.bootstrap_crc.lock")
-      raw.write("""{"holder":"otherhost:pid0","acquired_at_ms":2}""".getBytes("UTF-8"))
+      raw.write(torn.getBytes("UTF-8"))
       raw.close()
     }
+    def claim() = graft.io.Lease.claim(fs, new Path(lockP), "bootstrap", false, "takeover")
     conf.setLong("graft.lock.settle.ms", 1500L)
     try {
       tearCrc()
@@ -1157,18 +1208,53 @@ class OperatorsSpec extends SparkSpec {
         o.close()
       })
       healer.start()
-      val e = intercept[IllegalStateException] {
-        graft.io.IO.acquireProcessLock(spark, lockP, "bootstrap")
-      }
+      val e = intercept[IllegalStateException](claim())
       healer.join()
       assert(e.getMessage.contains("livehost:pid9"),
         s"the settle re-read must surface the holder, not a ChecksumException: ${e.getMessage}")
       // a checksum error that PERSISTS past the settle stays loud
       tearCrc()
-      intercept[org.apache.hadoop.fs.ChecksumException] {
-        graft.io.IO.acquireProcessLock(spark, lockP, "bootstrap")
-      }
+      intercept[org.apache.hadoop.fs.ChecksumException](claim())
       fs.delete(new Path(lockP), false)
+      // the claimer's OWN fresh marker torn during its settle: the
+      // verifying read-back settles and re-reads too, and the claimer
+      // must win with its own token — never report it as a foreign
+      // holder. The tear lands once the claim's marker exists; a heal
+      // lands after the first read-back, inside the re-read window.
+      // Left torn (what two racing claimers' interleaved data and .crc
+      // writes leave behind), the claimer writes its token again and
+      // wins with it.
+      def claimWhileTorn(healAfterMs: Option[Long]): Unit = {
+        val own = new java.util.concurrent.atomic.AtomicReference[String]()
+        val tearer = new Thread(() => {
+          def read(): String =
+            try {
+              val in = fs.open(new Path(lockP))
+              try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+            } catch { case _: java.io.IOException => "" }
+          var body = read()
+          while (body.isEmpty) { Thread.sleep(5L); body = read() }
+          own.set(body)
+          tearCrc(body, body.replace("}", ",\"torn\":1}"))
+          healAfterMs.foreach { ms =>
+            Thread.sleep(ms)
+            val o = fs.create(new Path(lockP), true)
+            o.write(body.getBytes("UTF-8"))
+            o.close()
+          }
+        })
+        tearer.start()
+        val won = try claim() finally tearer.join()
+        assert(!won.preexisting && own.get.contains(won.token),
+          s"the claimer must win with its own marker: ${own.get} vs ${won.token}")
+        graft.io.Lease.release(fs, won)
+        assert(!fs.exists(new Path(lockP)))
+      }
+      // a 2.5 s settle: over a second of margin on either side
+      conf.setLong("graft.lock.settle.ms", 2500L)
+      claimWhileTorn(healAfterMs = Some(3700L))
+      conf.setLong("graft.lock.settle.ms", 500L)
+      claimWhileTorn(healAfterMs = None)
     } finally conf.unset("graft.lock.settle.ms")
   }
 
@@ -1179,7 +1265,7 @@ class OperatorsSpec extends SparkSpec {
     // simulator. Its create is check-then-act (NOT atomic), so the
     // verified-claim settle is what carries exclusion; the settle must
     // be sized past the op latency (here 6x), the sizing rule the
-    // lockSettleMs scaladoc table documents per scheme.
+    // Lease scaladoc table documents per scheme.
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.slowfs.impl", classOf[graft.SlowLocalFs].getName)
     conf.setLong("graft.test.slowfs.op.ms", 25L)
@@ -1201,7 +1287,7 @@ class OperatorsSpec extends SparkSpec {
         val ths = (1 to 2).map { _ =>
           new Thread(() => {
             try results.add(Right(
-              graft.io.IO.acquireProcessLock(spark, lockP, "probe")))
+              graft.io.Lease.claim(fs, new Path(lockP), "probe", false, "takeover").token))
             catch { case t: Throwable => results.add(Left(t)) }
           })
         }

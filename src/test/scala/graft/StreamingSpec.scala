@@ -355,7 +355,7 @@ class StreamingSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("folded"), e2.getMessage)
     assert(fs.exists(new Path(s"$man/_checkpoint")),
-      "the guard's recoverSwap must have healed the parked checkpoint")
+      "the guard's Staging.recover must have healed the parked checkpoint")
   }
 
   test("multi-consumer manifest: the consumer-aware fold never starves a lagging sibling drain") {
