@@ -175,9 +175,8 @@ object IO {
     * 100k tiny files re-read at 176k files/s packed vs 18k files/s
     * through binaryFile and 0.4–1.2k files/s streamed — the per-file
     * listing/open cost is paid ONCE here and never again downstream).
-    * One binaryFile pass, published through [[Staging.publish]] so the
-    * table rename-swaps on HDFS or version-publishes on object stores
-    * like every staged artifact; read it back with
+    * One binaryFile pass, published through [[Staging.publish]] as a
+    * new version like every staged artifact; read it back with
     * [[readPackedBinary]]. Default is SHUFFLE-FREE: each scan task
     * (the source bin-packs ~`maxPartitionBytes` of small files per
     * task) writes one output file, so output files arrive
@@ -216,8 +215,8 @@ object IO {
     }
   }
 
-  /** Read back a [[packBinaryDir]] table, resolving whichever publish
-    * protocol wrote it (crash-window availability — Staging contract). */
+  /** Read back a [[packBinaryDir]] table from its live version
+    * (crash-window availability — Staging contract). */
   def readPackedBinary(spark: SparkSession, dest: String): DataFrame =
     spark.read.parquet(Staging.resolveRead(spark, dest))
 

@@ -3,17 +3,29 @@ package graft.io
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Crash-safe ATOMIC overwrite of a directory — the engine's one
-  * rename-swap. Every rewrite of a live directory goes through it: the
-  * model/index artifacts of the train-once/serve-many families (PQ/IVF
-  * indexes, SemDeDup cells, BPE/DSIR/NB models, band/bucket/fingerprint
-  * tables), the watermark control table
-  * ([[graft.incremental.Watermark.writeTable]], K6), [[IO.compact]], the
-  * landing-manifest fold's checkpoint, the streaming upsert sink and
-  * the SemDeDup norm stamp; their readers (the manifest bootstrap
-  * included) heal through [[recover]].
+/** The engine's two crash-safe publish protocols, one per kind of
+  * directory.
   *
-  * Why plain `SaveMode.Overwrite` is not enough for a SHARED artifact:
+  * STAGED ARTIFACTS — the model/index artifacts of the train-once/
+  * serve-many families (PQ/IVF indexes, SemDeDup cells, NB/DSIR/BPE/
+  * unigram-LM models, band/bucket/span/fingerprint tables, packed
+  * binary landings) — publish through [[publish]] and are read through
+  * [[resolveRead]]: each build lands in its own immutable
+  * `<root>/v=<n>/` and a small `LATEST` manifest flips readers to it.
+  * That is the only protocol of the two that stays atomic where
+  * directory rename is a copy + delete (S3-like object stores): the
+  * one mutation per publish is a small-manifest update, O(1) in
+  * artifact bytes on any store, and a reader that resolved a version
+  * keeps a complete directory until GC retires it.
+  *
+  * TABLES REWRITTEN IN PLACE — the watermark control table
+  * ([[graft.incremental.Watermark.writeTable]], K6), [[IO.compact]],
+  * the landing-manifest fold's checkpoint, the streaming upsert sink
+  * and the SemDeDup norm stamp — keep their path and go through
+  * [[atomicSwap]], the engine's one rename-swap; their readers (the
+  * manifest bootstrap included) heal through [[recover]].
+  *
+  * Why plain `SaveMode.Overwrite` is not enough for a SHARED directory:
   * it deletes the live directory before the new job's files commit, so
   * (a) a reader during the rebuild window sees a missing or partial
   * artifact (the raw path-not-found the PQ stamp guard can only
@@ -21,95 +33,31 @@ import org.apache.spark.sql.SparkSession
   * — the "once" in train-once/serve-many is gone and every consumer
   * blocks on a full retrain.
   *
-  * Protocol, per artifact ROOT (multi-table artifacts — a PQ index's
-  * centroids + codes + stamp — swap as ONE unit, so a reader can never
-  * pair centroids from one build with codes from another):
+  * Rename-swap protocol, per directory (multi-table directories swap as
+  * ONE unit):
   *   1. heal a previous crash: live missing + old-copy present →
   *      rename it back (the only crash window leaves exactly that state);
-  *   2. `build` writes the COMPLETE artifact under a tmp dir BESIDE the target;
+  *   2. `build` writes the COMPLETE table under a tmp dir BESIDE the target;
   *   3. swap: live → old-copy, tmp → live — each rename
   *      `require`d, because Hadoop rename reports most failures by
   *      RETURNING FALSE (an unchecked failed second rename would let
   *      step 4 delete the last copy);
   *   4. delete the old copy.
   *
-  * A reader sees the complete previous artifact up to the instant of
-  * the same-filesystem directory rename and the complete new artifact
-  * after it. If a build CRASHES between the two renames, serving reads
-  * fail fast (no live path) until the next build — or an explicit
-  * [[recover]] — restores the previous artifact; nothing is ever torn.
-  * Single-writer per artifact root is assumed (the registry's
-  * buildOnce memo / global-lock conventions); the swap protects
-  * READERS, it does not arbitrate concurrent writers.
-  *
-  * Filesystem contract, stated honestly for the 100 TB deployment:
-  * the rename-swap protocol relies on directory rename being atomic
-  * and O(1), which holds on HDFS and POSIX filesystems. On S3-like
-  * object stores rename is a COPY + DELETE — O(artifact bytes) and
-  * not atomic — so there the right publish is a pointer one level up:
-  * [[publishVersioned]] writes `<path>/v=<build-id>/` and then
-  * updates a small `LATEST` manifest the readers resolve. Both
-  * publishes produce the same artifact layout INSIDE the live
-  * directory; [[resolveRead]] auto-detects which protocol wrote an
-  * artifact root, so every serving path works against either. Select
-  * per session with `spark.graft.staging.publishMode` = `rename`
-  * (default) | `versioned` — [[publish]] dispatches on it, and EVERY
-  * staged builder in the engine (IVF/PQ indexes, SemDeDup cells,
-  * NB/DSIR/BPE/unigram-LM models, band/bucket/span/fingerprint
-  * tables) publishes through it, with every reader resolving through
-  * [[resolveRead]] — one conf flips the whole engine to the
-  * object-store protocol. */
+  * A reader sees the complete previous table up to the instant of
+  * the same-filesystem directory rename and the complete new table
+  * after it. If a write CRASHES between the two renames, reads fail
+  * fast (no live path) until the next write — or an explicit
+  * [[recover]] — restores the previous table; nothing is ever torn.
+  * The swap relies on directory rename being atomic and O(1), which
+  * holds on HDFS and POSIX filesystems. Single writer per directory or
+  * artifact root is assumed for both protocols (the registry's
+  * buildOnce memo / global-lock conventions); they protect READERS,
+  * they do not arbitrate concurrent writers. */
 object Staging {
-
-  /** Session knob selecting the publish protocol for [[publish]]:
-    * `rename` (two-rename directory swap — HDFS/POSIX) or `versioned`
-    * (version dirs + manifest pointer — object-store-safe). */
-  val PublishModeKey = "spark.graft.staging.publishMode"
-
-  /** Driver-main helper: apply `SPARK_GRAFT_PUBLISH_MODE` from the
-    * environment to the session conf — shared by Bench and Verify so
-    * the env-var/conf-key pairing lives in one place. */
-  def applyPublishModeFromEnv(spark: SparkSession): Unit =
-    sys.env.get("SPARK_GRAFT_PUBLISH_MODE")
-      .foreach(m => spark.conf.set(PublishModeKey, m))
 
   private def fs(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Protocol-dispatching publish: the builder contract of
-    * [[atomicSwap]] (write the COMPLETE artifact — single- or
-    * multi-table — under the directory you are handed), with the
-    * publish step chosen by [[PublishModeKey]]. Serving paths read
-    * through [[resolveRead]] and never care which mode wrote.
-    *
-    * `mode` pins the protocol for THIS artifact explicitly — a builder
-    * that must publish versioned (e.g. a registry path proving the
-    * object-store protocol) passes `Some("versioned")` instead of
-    * mutating the session-wide conf around the call, which would leak
-    * the protocol into any staged build running concurrently on the
-    * same session (round-15 ADVICE). `None` = session conf decides.
-    *
-    * `gcKeep` is the versioned protocol's retention cadence (round-15
-    * verdict item 5): after each successful publish, versions older
-    * than live plus `gcKeep` published predecessors are dropped —
-    * without it every re-publish over the same root accumulates a full
-    * artifact copy forever, storage-doubling per rebuild on exactly
-    * the object-store layout built for 100 TB. The default keep=1
-    * retains live + 1 predecessor, so a reader that resolved just
-    * before the publish still has its complete version on disk (the
-    * reader-grace lag [[gcVersions]] documents); pass `None` to opt
-    * out with a stated reason (e.g. an external snapshot/audit
-    * retention policy owns the root). No-op under rename mode, whose
-    * swap already retires the previous build. */
-  def publish(spark: SparkSession, path: String,
-              mode: Option[String] = None,
-              gcKeep: Option[Int] = Some(1))(build: String => Unit): Unit =
-    mode.getOrElse(spark.conf.get(PublishModeKey, "rename")) match {
-      case "versioned" => publishVersioned(spark, path, gcKeep)(build): Unit
-      case "rename"    => atomicSwap(spark, path)(build)
-      case other => throw new IllegalArgumentException(
-        s"$PublishModeKey must be 'rename' or 'versioned', got '$other'")
-    }
 
   /** Build-into-staging then swap live (the protocol above). `build`
     * receives the staging directory `<path>.__swap_tmp` and must leave
@@ -140,8 +88,9 @@ object Staging {
   /** Heal a crash that died between the two renames — the only state
     * with no live artifact is (live missing, `__swap_old` present).
     * Safe to call any time; [[atomicSwap]] calls it on entry, and a
-    * serving path that wants crash-window availability calls it before
-    * reading (the prebuilt PQ/IVF readers and semanticDedupStaged do).
+    * reader that wants crash-window availability calls it before
+    * reading (the watermark table, the fold checkpoint, the IVF norm
+    * stamp do).
     * Concurrent heals are safe: a reader whose rename loses the race
     * re-checks that the artifact is live and proceeds. One benign race
     * with an in-flight swap, stated for the record: a reader's recover
@@ -166,7 +115,7 @@ object Staging {
     }
   }
 
-  // ---- object-store-safe versioned publish (round-14 verdict item 1) ----
+  // ---- versioned publish: the staged-artifact protocol ----
   //
   // Layout under the artifact root:
   //   <root>/v=000001/...          complete artifact build (immutable once
@@ -175,20 +124,18 @@ object Staging {
   //                                without it is a torn/abandoned build
   //   <root>/LATEST                tiny manifest naming the live version
   //
-  // Why this is the 100 TB/object-store shape: readers resolve a version
-  // ONCE and then read immutable files — no reader ever observes a
-  // directory being renamed out from under it, and the only mutation per
-  // publish is one small-manifest update, O(1) in artifact bytes on any
-  // store (vs the rename-swap's copy+delete of the WHOLE artifact on
-  // S3-likes). The manifest update itself is a tmp-file + rename(OVERWRITE)
-  // — atomic on HDFS/POSIX via FileContext; on S3-likes the manifest copy
-  // window is microseconds over bytes, and a reader that catches it torn
-  // or missing falls back to the max _PUBLISHED version scan, which is
+  // Readers resolve a version ONCE and then read immutable files — no
+  // reader ever observes a directory being renamed out from under it,
+  // and the only mutation per publish is one small-manifest update. The
+  // manifest update itself is a tmp-file + rename(OVERWRITE) — atomic on
+  // HDFS/POSIX via FileContext; on S3-likes the manifest copy window is
+  // microseconds over bytes, and a reader that catches it torn or
+  // missing falls back to the max _PUBLISHED version scan, which is
   // always a complete artifact. Crash anywhere: before _PUBLISHED leaves
   // an inert unpublished dir (GC-able); after _PUBLISHED but before the
   // manifest update leaves LATEST on the previous complete version until
   // the next publish (or a fallback-scan reader) advances it. Single
-  // writer per root, as everywhere in Staging.
+  // writer per root.
 
   private val VersionFmt = "v=%06d"
   private def versionDir(root: String, v: Long): String =
@@ -204,20 +151,21 @@ object Staging {
   private def isPublished(f: FileSystem, root: String, v: Long): Boolean =
     f.exists(new Path(s"${versionDir(root, v)}/_PUBLISHED"))
 
-  /** The version LATEST names, when the manifest exists, parses, and
-    * points at a _PUBLISHED dir — None on missing/torn/dangling, which
-    * sends readers to the fallback scan. */
+  /** The version LATEST names, when the manifest exists, reads, parses,
+    * and points at a _PUBLISHED dir — None on missing/torn/dangling,
+    * which sends readers to the fallback scan. Any IOException while
+    * reading counts as torn: on a checksummed filesystem (`file://`)
+    * the manifest's rename moves the data file and its `.crc` sidecar
+    * separately, so a kill between the two leaves new bytes under the
+    * old checksum and `read` throws `ChecksumException`. */
   private def manifestVersion(f: FileSystem, root: String): Option[Long] = {
-    val latest = new Path(s"$root/LATEST")
-    if (!f.exists(latest)) None
-    else {
-      val in = f.open(latest)
-      // read to EOF, never a single read(): object-store streams may
-      // legally return a short first read, and a truncated prefix of a
-      // multi-digit version ("12" -> "1") PARSES as a different valid
-      // version and would silently serve a stale artifact (round-15
-      // review finding)
-      val txt = try {
+    // read to EOF, never a single read(): object-store streams may
+    // legally return a short first read, and a truncated prefix of a
+    // multi-digit version ("12" -> "1") PARSES as a different valid
+    // version and would silently serve a stale artifact
+    val txt = try {
+      val in = f.open(new Path(s"$root/LATEST"))
+      try {
         val buf = new java.io.ByteArrayOutputStream(64)
         val chunk = new Array[Byte](64)
         var n = in.read(chunk)
@@ -230,32 +178,37 @@ object Staging {
         // than parse a truncated prefix
         if (buf.size > 64) "" else buf.toString("UTF-8").trim
       } finally in.close()
-      txt.toLongOption.filter(isPublished(f, root, _))
-    }
+    } catch { case _: java.io.IOException => "" }
+    txt.toLongOption.filter(isPublished(f, root, _))
   }
 
-  /** Live version of a versioned artifact root: the manifest's, or —
-    * when the manifest is missing, torn, or names an unpublished dir —
-    * the highest _PUBLISHED version on disk. None = nothing published. */
+  /** Live version of an artifact root: the manifest's, or — when the
+    * manifest is missing, torn, or names an unpublished dir — the
+    * highest _PUBLISHED version on disk. None = nothing published. */
   def liveVersion(spark: SparkSession, root: String): Option[Long] = {
     val f = fs(spark, root)
     manifestVersion(f, root)
       .orElse(listVersions(f, root).filter(isPublished(f, root, _)).lastOption)
   }
 
-  /** Build-then-publish a new version: `build` writes the complete
-    * artifact into a fresh `<root>/v=<n>/` (n = max existing + 1, so a
-    * crashed build's number is never reused), the `_PUBLISHED` marker
-    * commits it, and the LATEST manifest flips readers to it. On any
-    * build failure the live artifact is untouched and the partial
-    * version dir stays unpublished (invisible to readers; [[gcVersions]]
-    * sweeps it). `gcKeep` (default 1) runs [[gcVersions]] after the
-    * manifest flip — see [[publish]] for the retention contract;
-    * `None` skips GC. Returns the published version. */
-  def publishVersioned(spark: SparkSession, root: String,
-                       gcKeep: Option[Int] = Some(1))(build: String => Unit): Long = {
+  /** Build-then-publish a new version of the artifact at `root`:
+    * `build` writes the COMPLETE artifact — single- or multi-table —
+    * into a fresh `<root>/v=<n>/` (n = max existing + 1, so a crashed
+    * build's number is never reused), the `_PUBLISHED` marker commits
+    * it, and the LATEST manifest flips readers to it. On any build
+    * failure the live artifact is untouched and the partial version dir
+    * stays unpublished (invisible to readers; [[gcVersions]] sweeps
+    * it). Serving paths read through [[resolveRead]].
+    *
+    * Retention is fixed at live + 1 published predecessor: after the
+    * manifest flip, [[gcVersions]] drops every older version, so a
+    * re-publish over the same root never accumulates artifact copies,
+    * while a reader that resolved just before the publish still has
+    * its complete version on disk (the reader-grace lag). Returns the
+    * published version. */
+  def publish(spark: SparkSession, root: String)(build: String => Unit): Long = {
     val f = fs(spark, root)
-    recover(spark, root) // heal a crashed rename-swap before adopting
+    recover(spark, root) // heal an older build's crashed rename-swap before adopting
     f.mkdirs(new Path(root))
     adoptRenameLayout(f, root)
     val v = listVersions(f, root).lastOption.getOrElse(0L) + 1L
@@ -263,27 +216,24 @@ object Staging {
     f.delete(new Path(dir), true)
     build(dir)
     require(f.exists(new Path(dir)),
-      s"versioned publish: build left nothing at $dir")
+      s"publish: build left nothing at $dir")
     f.create(new Path(s"$dir/_PUBLISHED"), true).close()
     writeManifest(spark, f, root, v)
-    // retention cadence: GC AFTER the manifest points at v, so the
-    // sweep can only ever retire versions two publishes stale (live is
-    // v, keep=1 retains v-1) — the reader-grace window is structural
-    gcKeep.foreach(k => gcVersions(spark, root, keep = k))
+    // GC AFTER the manifest points at v, so the sweep can only ever
+    // retire versions two publishes stale (live is v, keep=1 retains
+    // v-1) — the reader-grace window is structural
+    gcVersions(spark, root, keep = 1)
     v
   }
 
-  /** Migrate a rename-layout artifact in place on the FIRST versioned
-    * publish over its root: every non-reserved root entry (the old
-    * build's tables/files) moves — rename-only — into `v=000000` with
-    * a _PUBLISHED marker, so the previous build stays the live
-    * fallback until the new version publishes and GC retires it like
-    * any predecessor. Without this, flipping publishMode over an
-    * existing root would strand the old artifact's data files at the
-    * root forever — invisible to gcVersions, silently doubling storage
-    * (round-15 review finding). Readers of the OLD layout racing the
-    * migration see the same window a rename-swap already has;
-    * single-writer per root, as everywhere in Staging. */
+  /** Migrate an artifact root an older build published by rename-swap
+    * (the artifact's tables/files directly under the root) on the next
+    * [[publish]]: every non-reserved root entry moves — rename-only —
+    * into `v=000000` with a _PUBLISHED marker, so the previous build
+    * stays the live fallback until the new version publishes and GC
+    * retires it like any predecessor. Without this the old artifact's
+    * data files would stay stranded at the root forever — invisible to
+    * gcVersions, silently doubling storage. Single writer per root. */
   private def adoptRenameLayout(f: FileSystem, root: String): Unit = {
     if (listVersions(f, root).isEmpty && !f.exists(new Path(s"$root/LATEST"))) {
       // ".LATEST.tmp" is the shared atomic-write helper's tmp name
@@ -308,48 +258,34 @@ object Staging {
   /** Flip LATEST to `v` — one shared implementation of the atomic
     * small-file publish ([[IO.atomicWriteSmallFile]]; the consumer
     * marks use the same one, so the crash-window reasoning lives in
-    * one place — round-18 second review pass). */
+    * one place). */
   private def writeManifest(spark: SparkSession, f: FileSystem, root: String,
                             v: Long): Unit =
     IO.atomicWriteSmallFile(spark, new Path(s"$root/LATEST"),
       v.toString.getBytes("UTF-8"))
 
-  /** Resolve the directory a reader should scan for the artifact at
-    * `root`, whichever protocol published it — the single read-side
-    * entry point of the staging family:
-    *   - versioned layout (a LATEST manifest or any `v=*` dir):
-    *     the live version's directory; loud error if nothing is
-    *     published yet (a torn first build must not read as an
-    *     empty artifact);
-    *   - rename-swap layout: `root` itself, after healing a crashed
-    *     swap ([[recover]] — the crash-window-availability contract).
-    * Layout detection is from the root's contents, not session config:
-    * a reader must resolve what the WRITER published, and mixed fleets
-    * mid-migration read both. `v=*` directories and `LATEST` are
-    * RESERVED names at an artifact root — a rename-swap artifact whose
-    * own content created them (e.g. a table hive-partitioned on a
-    * column literally named `v`) would be misdetected as versioned;
-    * no engine artifact does, and new ones must not. */
-  def resolveRead(spark: SparkSession, root: String): String = {
-    val f = fs(spark, root)
-    recover(spark, root)
-    val versioned = f.exists(new Path(s"$root/LATEST")) ||
-      listVersions(f, root).nonEmpty
-    if (!versioned) root
-    else versionDir(root, liveVersion(spark, root).getOrElse(
+  /** The directory a reader should scan for the artifact at `root`:
+    * the live version's. Fails loudly when nothing is published there —
+    * a first build that crashed before its _PUBLISHED marker (or is
+    * still in flight) must not read as an empty artifact, and a root an
+    * older build rename-swapped (no version dirs) must be republished,
+    * which adopts it. `v=*` directories and `LATEST` are RESERVED names
+    * at an artifact root. */
+  def resolveRead(spark: SparkSession, root: String): String =
+    versionDir(root, liveVersion(spark, root).getOrElse(
       throw new IllegalStateException(
-        s"versioned artifact root $root has version dirs but none published — " +
-          "the first build either crashed before its _PUBLISHED marker " +
-          "(rebuild) or is still in flight (wait for its publish)")))
-  }
+        s"no published version at staged artifact root $root — publish it " +
+          "with graft.io.Staging.publish (a root written by an older " +
+          "build's rename-swap is adopted by that publish; a first build " +
+          "that crashed before its _PUBLISHED marker must be rebuilt)")))
 
   /** Drop stale versions: keeps the live version plus its `keep` most
     * recent PUBLISHED predecessors, and deletes every other version
     * below live — including unpublished (torn/abandoned) build dirs.
     * Never touches the live version, anything newer (an in-flight
     * build's dir), or the manifest. In-flight readers of a
-    * just-retired version are why `keep` defaults to 1 — run GC on a
-    * lag, not inside the publish. Returns the deleted versions. */
+    * just-retired version are why `keep` defaults to 1, the value
+    * [[publish]] runs it with. Returns the deleted versions. */
   def gcVersions(spark: SparkSession, root: String, keep: Int = 1): Seq[Long] = {
     require(keep >= 0, "keep must be >= 0")
     val f = fs(spark, root)

@@ -142,12 +142,11 @@ object DedupLsh {
     // × selectivity heuristics) and would BROADCAST a corpus-sized
     // side (OOM at 50k docs, fatal at real scale); the hint's build
     // side is thin (band, id) rows, small at any corpus size. The two
-    // VERIFY joins carry NO hint (round-11 A/B,
-    // probe_x2_verify_join*.sc): un-hinted, the static planner picks
-    // sort-merge (both sides' estimates exceed the broadcast
-    // threshold: the pairs side is a join output, whose estimate can
-    // only OVERshoot, and the shingle side is scan-derived, which
-    // scales with the files) and AQE then converts to broadcast-hash
+    // VERIFY joins carry NO hint (round-11 A/B, PROBES.md): un-hinted,
+    // the static planner picks sort-merge (both sides' estimates exceed
+    // the broadcast threshold: the pairs side is a join output, whose
+    // estimate can only OVERshoot, and the shingle side is scan-derived,
+    // which scales with the files) and AQE then converts to broadcast-hash
     // at runtime exactly when the measured shingle table is genuinely
     // small — 1.7 s vs the pinned-merge 3.1 s at sf0.1, bit-identical.
     // Under pressure the conversion simply never fires and the
@@ -164,29 +163,11 @@ object DedupLsh {
     // dedup (id_a, id_b) BEFORE the jaccard verify: a pair colliding in
     // k bands would otherwise pay k verifies (the verify is the hot
     // loop at scale — round-3 verdict).
-    // overridable for A/B measurement (system property
-    // graft.dedup.verifyJoin = none | merge | shuffle_hash); "none"
-    // is the shipping default per the probes above. Fail fast on any
-    // other value: the analyzer DROPS unrecognized hints with only a
-    // log warning, so a typo'd A/B run would silently measure the
-    // un-hinted plan while reporting the requested mode.
-    val verifyHint = sys.props.getOrElse("graft.dedup.verifyJoin", "none")
-    require(Set("none", "merge", "shuffle_hash").contains(verifyHint),
-      s"graft.dedup.verifyJoin must be none|merge|shuffle_hash, got '$verifyHint'")
-    // ...except in the STATIC-BROADCAST danger band, where hint-free
-    // planning is pinned back to merge (see verifyJoinStaticRisk)
-    val sessConf = df.sparkSession.sessionState.conf
-    // lazy: only the "none" branch reads it — an explicit A/B override
-    // must not pay the driver-side analyze+optimize of the shingle
-    // subplan whose result it then ignores (round-11 review finding)
-    lazy val staticRisk = verifyJoinStaticRisk(
+    val staticRisk = verifyJoinStaticRisk(
       withSh.queryExecution.optimizedPlan.stats.sizeInBytes,
-      sessConf.autoBroadcastJoinThreshold)
-    def hinted(frame: DataFrame): DataFrame = verifyHint match {
-      case "none" if staticRisk => frame.hint("merge")
-      case "none"               => frame
-      case h                    => frame.hint(h)
-    }
+      df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+    def hinted(frame: DataFrame): DataFrame =
+      if (staticRisk) frame.hint("merge") else frame
     val verified = a.join(b.hint("shuffle_hash"), Seq("band"))
       .filter(col("id_a") < col("id_b"))
       .dropDuplicates("id_a", "id_b")

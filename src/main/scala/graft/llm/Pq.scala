@@ -69,6 +69,23 @@ object Pq {
     cents.groupBy(col("s"))
       .agg(sort_array(collect_list(struct(col("cell_id"), col("cv")))).as("cells"))
 
+  /** The [[centsBySubspace]] operand built locally from collected
+    * (s, cell_id, cv) centroid rows — a `LocalRelation` (job-free
+    * broadcast build) with the same `(s, cells)` schema, cells sorted by
+    * cell_id. */
+  private[graft] def cellsFrame(spark: org.apache.spark.sql.SparkSession,
+                                cs: Seq[(Int, Long, Seq[Long])]): DataFrame = {
+    import spark.implicits._
+    cs.groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (s, rows) => (s, rows.sortBy(_._2).map(t => L2Cell(t._2, t._3))) }
+      .toDF("s", "cells")
+  }
+
+  /** One element of the L2 codebook array: the field names are the
+    * documented `array<struct<cell_id, cv>>` contract, the same names
+    * [[centsBySubspace]] builds. */
+  private[graft] case class L2Cell(cell_id: Long, cv: Seq[Long])
+
   /** Per-subspace k-means codebooks: (s, cell_id, cv), trained for all
     * m subspaces in one pass per iteration.
     *
@@ -98,12 +115,8 @@ object Pq {
         .toSeq.sortBy(t => (t._1, t._2))
     var cents = collectCents(sv.filter(col("vec_id") < numCells)
       .select(col("s"), col("vec_id").as("cell_id"), col("sv").as("cv")))
-    def cellsFrame(cs: Seq[(Int, Long, Seq[Long])]): DataFrame =
-      cs.groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (s, rows) => (s, rows.sortBy(_._2).map(t => (t._2, t._3))) }
-        .toDF("s", "cells")
     for (_ <- 0 until iters) {
-      val assigned = sv.join(broadcast(cellsFrame(cents)), Seq("s"))
+      val assigned = sv.join(broadcast(cellsFrame(spark, cents)), Seq("s"))
         .select(col("s"),
           call_function("nearest_cell_l2", col("sv"), col("cells")).as("cell_id"),
           col("sv"))
@@ -178,8 +191,9 @@ object Pq {
       .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("adc_dist"))
   }
 
-  /** Build a PERSISTED plain-ADC index under `indexDir` — the
-    * [[buildPqIndex]] layout minus the coarse level:
+  /** Build a PERSISTED plain-ADC index published under `indexDir`
+    * (each build one `v=<n>` version dir, [[graft.io.Staging.publish]])
+    * — the [[buildPqIndex]] layout minus the coarse level:
     *   - `pq_centroids`: (s, cell_id, cv) sub-codebooks;
     *   - `codes`:        (vec_id, s, code) — NOT cell-partitioned,
     *     because plain ADC scans every code by design (its niche is
@@ -194,7 +208,7 @@ object Pq {
     graft.functions.LongArrayDot.register(corpus.sparkSession)
     val unitNorm = Similarity.isUnitNormQ(v)
     val cents = trainCodebooks(v, m, numCells, iters)
-    // the three tables swap live as ONE unit (graft.io.Staging): a
+    // the three tables publish as ONE version (graft.io.Staging): a
     // reader can never pair centroids from one build with codes or a
     // stamp from another, and a crashed rebuild keeps the old index
     graft.io.Staging.publish(corpus.sparkSession, indexDir) { tmp =>
@@ -233,13 +247,11 @@ object Pq {
   }
 
   /** A rebuild may change the stamp — drop every cached verdict for
-    * the LIVE index path so the next query re-reads the fresh params.
-    * Called after the atomic swap (writeParams itself targets the
-    * staging directory, whose path never appears in the memo). */
+    * the root's versions so the next query re-reads the fresh params.
+    * Called after the publish (writeParams itself targets the new
+    * version's directory before any reader resolves it). */
   private def purgeValidated(indexDir: String): Unit =
-    // both key shapes: "<root>|..." (rename-swap) and "<root>/v=N|..."
-    validatedParams.keySet().removeIf(k =>
-      k.startsWith(indexDir + "|") || k.startsWith(indexDir + "/"))
+    validatedParams.keySet().removeIf(_.startsWith(indexDir + "/v="))
 
   /** (liveDir, m, stampMtime) triples already checked this JVM,
     * mapped to the build's unit_norm stamp (None = a pre-norm-stamp
@@ -253,48 +265,38 @@ object Pq {
     * one getFileStatus for the stamp mtime; milliseconds on an object
     * store, microseconds locally. A serving loop that wants even that
     * off the per-call path resolves once per batch and pins the
-    * returned dir. The mtime is part of the key so a rebuild by
-    * ANOTHER process (or, under the versioned layout, a rebuild moving
-    * the live dir itself) invalidates the stale verdict — the exact
+    * returned dir. The resolved dir and the mtime are part of the key,
+    * so a rebuild (a new live version) or a stamp rewritten by ANOTHER
+    * process invalidates the stale verdict — the exact
     * silent-ADC-drop window the guard exists to close. */
   private val validatedParams =
     new java.util.concurrent.ConcurrentHashMap[String, Option[Boolean]]()
 
-  /** Returns the RESOLVED live artifact directory (the root itself
-    * under the rename-swap layout, the live `v=N` dir under the
-    * versioned one — [[graft.io.Staging.resolveRead]]) plus the
+  /** Returns the RESOLVED live artifact directory (the live `v=N`
+    * dir — [[graft.io.Staging.resolveRead]]) plus the
     * build's `unit_norm` stamp (None on a pre-norm-stamp external
     * build); readers scan the index tables under the resolved dir,
     * never under the raw root, and the metric-mixing serve paths gate
     * on the stamp via [[requireUnitNorm]]. */
   private def requireParamMatch(spark: org.apache.spark.sql.SparkSession,
                                 indexDir: String, m: Int): (String, Option[Boolean]) = {
-    // crash-window availability on either publish protocol: heal a
-    // crashed rename-swap, or resolve the live published version
-    // (graft.io.Staging contract)
     val live = graft.io.Staging.resolveRead(spark, indexDir)
     val stampPath = new org.apache.hadoop.fs.Path(s"$live/index_params")
     val fs = stampPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mtime =
       try fs.getFileStatus(stampPath).getModificationTime
       catch {
-        // distinguish "no index at all" (wrong path / never built) from
-        // "index without a stamp" (external or pre-stamp builder) — the
-        // second message would assert the existence of an index that
-        // isn't there (round-14 self-review finding)
-        case _: java.io.FileNotFoundException
-            if !fs.exists(new org.apache.hadoop.fs.Path(indexDir)) =>
-          throw new IllegalArgumentException(
-            s"no PQ index at $indexDir — build it with " +
-              "buildAdcIndex/buildPqIndex (or check the path)")
+        // "no index at all" already failed in resolveRead (nothing
+        // published at the root); a published version without the stamp
+        // is an external or pre-stamp build
         case _: java.io.FileNotFoundException => throw new IllegalArgumentException(
           s"PQ index at $indexDir has no index_params stamp — it was built by " +
             "an external/pre-stamp builder, so its m cannot be verified and a " +
             "mismatch would silently drop per-subvector ADC terms; rebuild the " +
             "artifact with buildAdcIndex/buildIvfAdcIndex")
       }
-    // keyed on the RESOLVED dir: under the versioned layout a rebuild
-    // changes the path itself, so stale verdicts can never be reused
+    // keyed on the RESOLVED dir: a rebuild changes the path itself, so
+    // stale verdicts can never be reused
     val key = s"$live|$m|$mtime"
     val unitNorm = Option(validatedParams.get(key)).getOrElse {
       val rows =
@@ -587,7 +589,8 @@ object Pq {
       .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("adc_dist"))
   }
 
-  /** Build a PERSISTED IVFADC index under `indexDir` — the
+  /** Build a PERSISTED IVFADC index published under `indexDir` (each
+    * build one `v=<n>` version dir, [[graft.io.Staging.publish]]) — the
     * [[Similarity.buildIvfIndex]] layout applied to codes:
     *   - `coarse`:       (cell_id, cv) coarse centroids;
     *   - `pq_centroids`: (s, cell_id, cv) residual sub-codebooks;
@@ -605,7 +608,7 @@ object Pq {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val unitNorm = Similarity.isUnitNormQ(v)
     val (coarse, pqCents, codes) = buildCodes(v, m, numCells, coarseCells, iters)
-    // all four tables swap live as ONE unit (see buildAdcIndex)
+    // all four tables publish as ONE version (see buildAdcIndex)
     graft.io.Staging.publish(corpus.sparkSession, indexDir) { tmp =>
       coarse.write.mode("overwrite").parquet(s"$tmp/coarse")
       pqCents.write.mode("overwrite").parquet(s"$tmp/pq_centroids")

@@ -38,10 +38,9 @@ private[registry] object LlmFixtures {
   def buildOnce(memo: java.util.Set[String], key: String)(build: => Unit): Unit =
     if (!memo.contains(key)) { build; memo.add(key) }
 
-  /** Read a staged artifact with crash-window availability on either
-    * publish protocol: [[graft.io.Staging.resolveRead]] heals a
-    * crashed rename-swap or resolves the live published version, the
-    * same convention the prebuilt PQ/IVF readers and
+  /** Read a staged artifact with crash-window availability:
+    * [[graft.io.Staging.resolveRead]] resolves the live published
+    * version, the same convention the prebuilt PQ/IVF readers and
     * semanticDedupStaged follow (round-14 ADVICE — the BPE/DSIR
     * fixture reads skipped it). `root` is the PUBLISH UNIT (the
     * Staging.publish path); multi-table artifacts pass the subpath to
@@ -177,7 +176,7 @@ private[registry] object LlmFixtures {
     buildOnce(stagedNbModels, s"${System.identityHashCode(s)}|$path") {
       val (terms, classes) = Classifier.trainNaiveBayesModel(
         Tables.documents(s, dir), "doc_id", "text", nbSeedLabel)
-      // terms + classes swap live as ONE unit (graft.io.Staging): the
+      // terms + classes publish as ONE version (graft.io.Staging): the
       // artifact-sync check can then only ever see one build's pair
       graft.io.Staging.publish(s, path) { tmp =>
         terms.write.mode("overwrite").parquet(s"$tmp/terms")

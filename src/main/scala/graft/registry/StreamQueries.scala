@@ -236,17 +236,15 @@ object StreamQueries {
         .orderBy("user_id")
     },
     "st5_stream_stitch_tws" -> { (s, dir) =>
-      // modern arbitrary-state API; requires the RocksDB provider —
-      // the engine default (round-15 verdict item 1), PINNED here so
-      // the heap A/B knob can't put this query on a provider that
-      // cannot run it. Table-sized result ⇒ parquet file-sink twin
+      // modern arbitrary-state API; requires the RocksDB provider,
+      // which every engine stream runs on (round-15 verdict item 1).
+      // Table-sized result ⇒ parquet file-sink twin
       val glob = writeMicroBatches(s, dir)
       Streams
         .runFileStreamToParquet(s, glob, streamSchema, scratch(dir, "st5tws_ckpt"),
           scratch(dir, "st5tws_out"),
           df => Streams.stitchDwellTws(s, df),
-          maxFilesPerTrigger = Some(2), shufflePartitions = Some(4),
-          stateStoreMode = Some("rocksdb"))
+          maxFilesPerTrigger = Some(2), shufflePartitions = Some(4))
         .orderBy("entry_id")
     },
     // st15 — streaming near-dup ingest gate: micro-batches of incoming

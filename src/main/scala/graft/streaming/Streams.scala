@@ -39,19 +39,14 @@ object Streams {
     if (fs.exists(p)) { fs.delete(p, true); () }
   }
 
-  /** Session knob selecting the state-store backend for every stream
-    * the engine runs: `rocksdb` (default) or `heap` (Spark's
-    * HDFSBackedStateStoreProvider, for A/B comparison). */
-  val StateStoreModeKey = "spark.graft.streaming.stateStore"
-
   private val TrackRowsKey =
     "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
 
   val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Engine-wide state-store default: ROCKSDB, for every stateful
-    * streaming query (round-15 verdict item 1). Spark's default
+  /** Engine-wide state store: ROCKSDB, for every stateful streaming
+    * query (round-15 verdict item 1). Spark's default
     * HDFSBackedStateStoreProvider keeps every state row in executor
     * HEAP (the loaded-version map) — correct at test scale, but
     * session windows, stream-stream joins, dedup state and top-k
@@ -72,10 +67,8 @@ object Streams {
     * compactOnCommit, formatVersion (Spark exposes no direct
     * bloom-policy knob) — all inside box noise across two sweeps:
     * the per-row tax is the provider's FLOOR, knobs exhausted. The
-    * default therefore trades wall while state still FITS heap for
-    * survival when it no longer does; deployments whose state
-    * provably fits executor heap reclaim the tax with `heap` mode
-    * (SPARK_GRAFT_STATE_STORE=heap).
+    * engine therefore trades wall while state still FITS heap for
+    * survival when it no longer does.
     *
     * The provider is a session-level SQL conf captured into the
     * query's checkpoint at START — Spark has no per-query spelling —
@@ -87,22 +80,19 @@ object Streams {
     * verdict #1 — the reference DAG schedules the users and
     * browsinghistory drains as sibling tasks, dags/dwh_dag.py:212-221);
     * the former session-wide set/restore swap and its one-stream-per-
-    * session lock are gone. `heap` mode opts a run back to the Spark
-    * default (the A/B knob the bench comparison uses); resuming an
-    * EXISTING checkpoint under a different provider is rejected by
-    * Spark itself (offsets pin the provider), so flipping the knob
-    * mid-deployment requires a fresh checkpoint — the standard Spark
-    * migration contract. */
+    * session lock are gone. Resuming an EXISTING checkpoint written
+    * under a different provider is rejected by Spark itself (offsets
+    * pin the provider), so a checkpoint from a heap-provider run needs
+    * a fresh checkpoint — the standard Spark migration contract. */
   private[graft] def newRunnerSession(
       spark: SparkSession,
-      stateStoreMode: Option[String],
       shufflePartitions: Option[Int]): SparkSession = {
     val runner = spark.newSession()
     // carry the caller's RUNTIME conf onto the clone: newSession()
     // starts from the builder-time conf, so session-level user settings
-    // (timezone, AQE toggles, the engine's own StateStoreModeKey)
-    // would otherwise silently reset. ONLY static/context-wide entries
-    // may fail the set (AnalysisException: CANNOT_MODIFY_CONFIG) —
+    // (timezone, AQE toggles, RocksDB settings) would otherwise
+    // silently reset. ONLY static/context-wide entries may fail the
+    // set (AnalysisException: CANNOT_MODIFY_CONFIG) —
     // they are shared through the context anyway, so exactly that
     // rejection is skipped; any other failure on a dynamic conf would
     // be a silently-dropped load-bearing setting and must surface
@@ -122,33 +112,21 @@ object Streams {
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val logKey =
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    stateStoreMode.getOrElse(runner.conf.get(StateStoreModeKey, "rocksdb")) match {
-      // heap PINS the HDFS-backed provider rather than merely skipping
-      // the RocksDB set: on a session whose defaults already pin
-      // providerClass, a skip would silently A/B rocksdb against
-      // rocksdb (round-16 review finding)
-      case "heap" => runner.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-      case "rocksdb" =>
-        // changelog checkpointing: commit uploads the delta, not a full
-        // snapshot — the per-trigger RocksDB commit cost that dominates
-        // small-state benches (st8 A/B: 7.6 s vs heap 3.5 s without it)
-        // and the recommended production config at large state.
-        // trackTotalNumberOfRows off by default (round-16 verdict item
-        // 4): maintaining the numTotalStateRows METRIC costs the write
-        // path a point-get per put/remove — a bookkeeping knob, zero
-        // effect on answers or stored state (the metric just reads 0).
-        // The interleaved sf0.1 A/B (probe_st8_rocksdb_trim.sc)
-        // attributes part of the stream-join trim to it; an explicit
-        // caller-session setting wins over the default (it was copied
-        // onto the clone above).
-        runner.conf.set(provKey, RocksDbProvider)
-        runner.conf.set(logKey, "true")
-        if (runner.conf.getOption(TrackRowsKey).isEmpty)
-          runner.conf.set(TrackRowsKey, "false")
-      case other => throw new IllegalArgumentException(
-        s"$StateStoreModeKey must be 'rocksdb' or 'heap', got '$other'")
-    }
+    // changelog checkpointing: commit uploads the delta, not a full
+    // snapshot — the per-trigger RocksDB commit cost that dominates
+    // small-state benches (st8 A/B: 7.6 s vs heap 3.5 s without it)
+    // and the recommended production config at large state.
+    // trackTotalNumberOfRows off by default (round-16 verdict item 4):
+    // maintaining the numTotalStateRows METRIC costs the write path a
+    // point-get per put/remove — a bookkeeping knob, zero effect on
+    // answers or stored state (the metric just reads 0). The
+    // interleaved sf0.1 A/B (probe_st8_rocksdb_trim.sc) attributes part
+    // of the stream-join trim to it; an explicit caller-session setting
+    // wins over the default (it was copied onto the clone above).
+    runner.conf.set(provKey, RocksDbProvider)
+    runner.conf.set(logKey, "true")
+    if (runner.conf.getOption(TrackRowsKey).isEmpty)
+      runner.conf.set(TrackRowsKey, "false")
     runner
   }
 
@@ -219,14 +197,10 @@ object Streams {
       outputMode: OutputMode = OutputMode.Append(),
       maxFilesPerTrigger: Option[Int] = None,
       shufflePartitions: Option[Int] = None,
-      format: String = "json",
-      // per-query state-store pin: transformWithState queries pass
-      // Some("rocksdb") because the heap provider cannot run them at
-      // all — the engine-wide A/B knob must not break them
-      stateStoreMode: Option[String] = None
+      format: String = "json"
   ): DataFrame = {
     deleteDir(spark, checkpoint)
-    val runner = newRunnerSession(spark, stateStoreMode, shufflePartitions)
+    val runner = newRunnerSession(spark, shufflePartitions)
     val reader = runner.readStream.schema(schema)
     val src = maxFilesPerTrigger
       .map(n => reader.option("maxFilesPerTrigger", n))
@@ -315,14 +289,13 @@ object Streams {
       maxFilesPerTrigger: Option[Int] = None,
       shufflePartitions: Option[Int] = None,
       format: String = "json",
-      stateStoreMode: Option[String] = None,
       reset: Boolean = true
   ): DataFrame = {
     if (reset) {
       deleteDir(spark, checkpoint)
       deleteDir(spark, outPath)
     }
-    val runner = newRunnerSession(spark, stateStoreMode, shufflePartitions)
+    val runner = newRunnerSession(spark, shufflePartitions)
     val reader = runner.readStream.schema(schema)
     val src = maxFilesPerTrigger
       .map(n => reader.option("maxFilesPerTrigger", n))

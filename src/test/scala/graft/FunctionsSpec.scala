@@ -124,7 +124,16 @@ class NearestCellSpec extends SparkSpec {
     assert(viaExpr == viaMaxBy)
     assert(!viaExpr.values.exists(_ == 3L), "tie must break to the smaller cell_id")
     assert(viaExpr.values.toSet.contains(2L), "duplicated-cv cell 2 must win its ties")
+    // the locally built operand of the training loop carries the same
+    // documented field names as the DataFrame-built one
+    assert(cellFields(Similarity.centsArrayFrameCosLocal(spark, Seq(1L -> Seq(1L, 2L))))
+      == Seq("cell_id", "cv", "c2"))
   }
+
+  /** Field names of the `cells` array-of-struct broadcast operand. */
+  private def cellFields(frame: org.apache.spark.sql.DataFrame): Seq[String] =
+    frame.schema("cells").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
+      .elementType.asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq
 
   test("nearest_cell_l2: identical PQ codes to the join+min_by reference shape") {
     import spark.implicits._
@@ -152,6 +161,8 @@ class NearestCellSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(codes.length == 24 * 8)
     assert(codes.sorted.toSeq == ref.sorted.toSeq)
+    assert(cellFields(graft.llm.Pq.cellsFrame(spark, Seq((0, 1L, Seq(1L, 2L)))))
+      == Seq("cell_id", "cv"))
   }
 
   test("nearest_cell null/edge contract: null vec, empty cells, zero-norm") {

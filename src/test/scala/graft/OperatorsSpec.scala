@@ -468,7 +468,7 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
-  test("Staging.publishVersioned: manifest flips readers atomically; crashes leave a complete live artifact; GC never touches it") {
+  test("Staging.publish: manifest flips readers atomically; crashes leave a complete live artifact; GC never touches it") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
     val st = graft.io.Staging
@@ -478,20 +478,20 @@ class OperatorsSpec extends SparkSpec {
     def readLive(): Seq[Int] =
       spark.read.parquet(st.resolveRead(spark, root)).as[Int].collect().toSeq
     // v1 publishes and resolves
-    val v1 = st.publishVersioned(spark, root) { d => Seq(1).toDF("v").write.parquet(d) }
+    val v1 = st.publish(spark, root) { d => Seq(1).toDF("v").write.parquet(d) }
     assert(v1 == 1L && readLive() == Seq(1))
     // a CONCURRENT READER that resolved before the next publish keeps a
     // complete immutable directory — the property the rename-swap lacks
     // on object stores (nothing is ever renamed out from under it)
     val pinnedV1 = st.resolveRead(spark, root)
-    val v2 = st.publishVersioned(spark, root) { d => Seq(2).toDF("v").write.parquet(d) }
+    val v2 = st.publish(spark, root) { d => Seq(2).toDF("v").write.parquet(d) }
     assert(v2 == 2L && readLive() == Seq(2))
     assert(spark.read.parquet(pinnedV1).as[Int].collect().toSeq == Seq(1),
       "a reader pinned to the previous version must still see it complete")
     // a build that dies before its _PUBLISHED marker is invisible: the
     // live artifact is untouched and the torn dir's number is never reused
     intercept[RuntimeException] {
-      st.publishVersioned(spark, root) { d =>
+      st.publish(spark, root) { d =>
         Seq(99).toDF("v").write.parquet(d)
         throw new RuntimeException("build died before publish")
       }
@@ -504,7 +504,7 @@ class OperatorsSpec extends SparkSpec {
     // resolves a retained version: the just-retired predecessor
     // survives exactly one more publish (the reader-grace lag).
     val pinnedV2 = st.resolveRead(spark, root)
-    val v4 = st.publishVersioned(spark, root) { d => Seq(4).toDF("v").write.parquet(d) }
+    val v4 = st.publish(spark, root) { d => Seq(4).toDF("v").write.parquet(d) }
     assert(v4 == 4L, s"torn v3 must not be reused, got $v4")
     assert(readLive() == Seq(4))
     assert(spark.read.parquet(pinnedV2).as[Int].collect().toSeq == Seq(2),
@@ -526,7 +526,7 @@ class OperatorsSpec extends SparkSpec {
     val out2 = fs.create(new Path(s"$root/LATEST"), true)
     out2.write("3".getBytes("UTF-8")); out2.close()
     assert(readLive() == Seq(4), "manifest naming an unpublished dir must fall back")
-    st.publishVersioned(spark, root) { d => Seq(5).toDF("v").write.parquet(d) }
+    st.publish(spark, root) { d => Seq(5).toDF("v").write.parquet(d) }
     assert(readLive() == Seq(5))
     // the publish cadence already GC'd: live=5 retains {4, 5}, v2 was
     // retired by this publish — an explicit sweep finds nothing left,
@@ -534,51 +534,51 @@ class OperatorsSpec extends SparkSpec {
     assert(st.gcVersions(spark, root, keep = 1) == Seq.empty)
     assert(readLive() == Seq(5))
     assert(fs.exists(new Path(s"$root/v=000004")) && !fs.exists(new Path(s"$root/v=000002")))
-    // gcKeep=None opts the publish out of the cadence (the stated-
-    // reason escape hatch for audit/snapshot retention policies)
-    st.publishVersioned(spark, root, gcKeep = None) { d =>
-      Seq(6).toDF("v").write.parquet(d)
-    }
-    assert(readLive() == Seq(6))
-    assert(fs.exists(new Path(s"$root/v=000004")) && fs.exists(new Path(s"$root/v=000005")),
-      "gcKeep=None must leave every published predecessor on disk")
-    // publish() dispatches on the session conf; bad values are loud
-    val modeKey = st.PublishModeKey
-    spark.conf.set(modeKey, "versioned")
-    try {
-      val root2 = s"${sys.props("java.io.tmpdir")}/graft_test_versioned2"
-      fs.delete(new Path(root2), true)
-      st.publish(spark, root2) { d => Seq(7).toDF("v").write.parquet(d) }
-      assert(fs.exists(new Path(s"$root2/v=000001/_PUBLISHED")),
-        "publish() under versioned mode must write the versioned layout")
-      assert(spark.read.parquet(st.resolveRead(spark, root2)).as[Int].collect().toSeq == Seq(7))
-      spark.conf.set(modeKey, "nonsense")
-      intercept[IllegalArgumentException] {
-        st.publish(spark, root2) { d => Seq(8).toDF("v").write.parquet(d) }
-      }
-    } finally spark.conf.unset(modeKey)
+    // a manifest torn on a CHECKSUMMED filesystem: `file://` renames
+    // LATEST and its `.LATEST.crc` sidecar separately, so a kill between
+    // the two leaves new bytes under the old checksum and read() throws
+    // ChecksumException. The reader must treat that as torn and fall
+    // back to the max published version, and the next publish must
+    // leave a readable manifest naming the new version.
+    val root5 = s"${sys.props("java.io.tmpdir")}/graft_test_versioned5"
+    fs.delete(new Path(root5), true)
+    st.publish(spark, root5) { d => Seq(1).toDF("v").write.parquet(d) }
+    st.publish(spark, root5) { d => Seq(2).toDF("v").write.parquet(d) }
+    assert(fs.exists(new Path(s"$root5/.LATEST.crc")), "checksummed filesystem expected")
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root5/LATEST"), "1".getBytes("UTF-8"))
+    assert(st.resolveRead(spark, root5) == s"$root5/v=000002",
+      "a manifest failing its checksum must read as torn")
+    assert(st.publish(spark, root5) { d => Seq(3).toDF("v").write.parquet(d) } == 3L)
+    val latestIn = fs.open(new Path(s"$root5/LATEST"))
+    val latest = try new String(latestIn.readAllBytes(), "UTF-8").trim finally latestIn.close()
+    assert(latest == "3", s"the next publish must rewrite the torn manifest, got '$latest'")
+    assert(spark.read.parquet(st.resolveRead(spark, root5)).as[Int].collect().toSeq == Seq(3))
+    fs.delete(new Path(root5), true)
     // a versioned root where the FIRST build tore (dirs, none published)
     // must refuse to resolve rather than read an empty artifact
     val root3 = s"${sys.props("java.io.tmpdir")}/graft_test_versioned3"
     fs.delete(new Path(root3), true)
     intercept[RuntimeException] {
-      st.publishVersioned(spark, root3) { d =>
+      st.publish(spark, root3) { d =>
         Seq(1).toDF("v").write.parquet(d)
         throw new RuntimeException("first build died")
       }
     }
     val e = intercept[IllegalStateException] { st.resolveRead(spark, root3) }
-    assert(e.getMessage.contains("none published"), e.getMessage)
-    // flipping an existing rename-layout root to versioned ADOPTS the
-    // old build as v=000000 — rename-only, nothing stranded at the root
-    // for gcVersions to miss — and readers keep resolving through the
-    // migration
+    assert(e.getMessage.contains(s"no published version at staged artifact root $root3") &&
+      e.getMessage.contains("Staging.publish"), e.getMessage)
+    // a root an older build published by rename-swap (the artifact
+    // directly under the root) is not served: the reader fails loudly,
+    // naming the root and the fix — and that fix, the next publish,
+    // ADOPTS the old build as v=000000 (rename-only, nothing stranded
+    // at the root for gcVersions to miss)
     val root4 = s"${sys.props("java.io.tmpdir")}/graft_test_versioned4"
     Seq(root4, root4 + ".__swap_old", root4 + ".__swap_tmp").foreach(p =>
       fs.delete(new Path(p), true))
     st.atomicSwap(spark, root4) { tmp => Seq(10).toDF("v").write.parquet(tmp) }
-    assert(st.resolveRead(spark, root4) == root4, "rename layout resolves in place")
-    val vNew = st.publishVersioned(spark, root4) { d => Seq(11).toDF("v").write.parquet(d) }
+    val e4 = intercept[IllegalStateException] { st.resolveRead(spark, root4) }
+    assert(e4.getMessage.contains(root4) && e4.getMessage.contains("publish"), e4.getMessage)
+    val vNew = st.publish(spark, root4) { d => Seq(11).toDF("v").write.parquet(d) }
     assert(vNew == 1L)
     assert(spark.read.parquet(st.resolveRead(spark, root4)).as[Int].collect().toSeq == Seq(11))
     assert(spark.read.parquet(s"$root4/v=000000").as[Int].collect().toSeq == Seq(10),
@@ -606,7 +606,7 @@ class OperatorsSpec extends SparkSpec {
         array(sin((col("id") + lit(shift)).cast("double")),
           cos((col("id") + lit(shift)).cast("double"))).as("embedding"))
     graft.llm.Similarity.stageSemanticCells(corpus(0), root,
-      numCells = Some(4), publishMode = Some("versioned"))
+      numCells = Some(4))
     // resolve NOW (v1), collect LATER — the overlap under test
     val inFlight = graft.llm.Similarity.semanticDedupStaged(spark, root,
       threshold = 0.999)
@@ -616,7 +616,7 @@ class OperatorsSpec extends SparkSpec {
     // second publish over the same root: flips LATEST to v2 and runs
     // the keep=1 GC cadence inside Staging.publish
     graft.llm.Similarity.stageSemanticCells(corpus(7), root,
-      numCells = Some(4), publishMode = Some("versioned"))
+      numCells = Some(4))
     assert(inFlight.select("vec_id").as[Long].collect().toSet == direct,
       "the in-flight read must survive the re-publish + GC and stay value-identical")
     // fresh reads resolve the NEW version
@@ -629,7 +629,7 @@ class OperatorsSpec extends SparkSpec {
     // a third publish retires v1 (two publishes stale) — the
     // structural reader-grace window, asserted at the artifact root
     graft.llm.Similarity.stageSemanticCells(corpus(13), root,
-      numCells = Some(4), publishMode = Some("versioned"))
+      numCells = Some(4))
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new Path(s"$root/v=000001")),
       "v1 must be GC'd after two further publishes")
@@ -1399,7 +1399,8 @@ class OperatorsSpec extends SparkSpec {
     assert(packed.collect().toSeq == direct.collect().toSeq,
       "packing must be byte-invisible")
     // bounded splittable output: the whole point of the pack
-    val parts = fs.globStatus(new Path(s"$dest/part-*")).length
+    val parts = fs.globStatus(
+      new Path(s"${graft.io.Staging.resolveRead(spark, dest)}/part-*")).length
     assert(parts <= 2 && parts >= 1, s"expected <=2 parquet files, got $parts")
     // the scale default is SHUFFLE-FREE: output files = scan tasks (the
     // source bin-packs small files per task, capped by the session's
@@ -1408,7 +1409,8 @@ class OperatorsSpec extends SparkSpec {
     val dest2 = s"$dest-noshuffle"
     fs.delete(new Path(dest2), true)
     graft.io.IO.packBinaryDir(spark, s"$src/*.bin", dest2)
-    val parts2 = fs.globStatus(new Path(s"$dest2/part-*")).length
+    val parts2 = fs.globStatus(
+      new Path(s"${graft.io.Staging.resolveRead(spark, dest2)}/part-*")).length
     assert(parts2 < 25 && parts2 >= 1,
       s"25 tiny files must bin-pack into fewer output files, got $parts2")
     assert(graft.io.IO.readPackedBinary(spark, dest2).count() == 25L)
@@ -1426,26 +1428,24 @@ class OperatorsSpec extends SparkSpec {
       .select(col("id").as("vec_id"),
         transform(sequence(lit(1), lit(8)),
           j => ((col("id") % 9) * 7 + j * 3).cast("double") / lit(100.0)).as("embedding"))
-    val dirR = s"${sys.props("java.io.tmpdir")}/graft_test_ivf_rename"
     val dirV = s"${sys.props("java.io.tmpdir")}/graft_test_ivf_versioned"
     val fs = new Path(dirV).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(dirR, dirR + ".__swap_old", dirR + ".__swap_tmp", dirV).foreach(p =>
-      fs.delete(new Path(p), true))
-    Similarity.buildIvfIndex(emb, dirR, numCells = 4, iters = 1)
-    spark.conf.set(st.PublishModeKey, "versioned")
-    try Similarity.buildIvfIndex(emb, dirV, numCells = 4, iters = 1)
-    finally spark.conf.unset(st.PublishModeKey)
-    // the versioned build lands centroids + members under ONE published
-    // version dir — the multi-table artifact publishes as one unit on
-    // the object-store protocol exactly as it swaps as one unit on HDFS
+    fs.delete(new Path(dirV), true)
+    Similarity.buildIvfIndex(emb, dirV, numCells = 4, iters = 1)
+    // the build lands centroids + members under ONE published version
+    // dir — the multi-table artifact publishes as one unit
     assert(fs.exists(new Path(s"$dirV/v=000001/_PUBLISHED")) &&
       fs.exists(new Path(s"$dirV/v=000001/centroids")) &&
       fs.exists(new Path(s"$dirV/v=000001/members")), "versioned layout missing")
+    assert(st.resolveRead(spark, dirV) == s"$dirV/v=000001")
     val q = emb.filter(col("vec_id") < 3)
-    def run(d: String) = Similarity.ivfTopKPrebuilt(spark, d, q, k = 5, nProbe = 2)
-      .orderBy("query_id", "rank").collect().toSeq
-    assert(run(dirV) == run(dirR),
-      "versioned-published index must serve identically to the rename-swap one")
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "rank", "neighbor_id", "cosine")
+        .as[(Long, Int, Long, Double)].collect().toSet
+    val inline = Similarity.ivfTopK(emb, q, k = 5, numCells = 4, nProbe = 2,
+      centroids = Some(Similarity.kmeansCodebook(emb, numCells = 4, iters = 1)))
+    assert(rowsOf(Similarity.ivfTopKPrebuilt(spark, dirV, q, k = 5, nProbe = 2)) == rowsOf(inline),
+      "the published index must serve identically to the inline IVF path")
     // append routes into the LIVE version's member table
     val batch = spark.range(100, 103)
       .select(col("id").as("vec_id"),
@@ -2300,21 +2300,33 @@ class OperatorsSpec extends SparkSpec {
 
     // append guards (round-14 self-review): appending to a path with no
     // index must fail with a named error, not CREATE a members-only
-    // directory that would wedge a rebuild's staged→live rename…
-    val e = intercept[IllegalArgumentException] {
-      Similarity.appendToIvfIndex(odd,
-        s"${sys.props("java.io.tmpdir")}/graft_test_ivf_nonexistent")
-    }
-    assert(e.getMessage.contains("no centroids"), e.getMessage)
-    // …and an append arriving in a crashed swap's window must recover
-    // the previous index first, then append into it normally
+    // directory…
+    val missing = s"${sys.props("java.io.tmpdir")}/graft_test_ivf_nonexistent"
     val fsIdx = new org.apache.hadoop.fs.Path(idx2)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fsIdx.rename(new org.apache.hadoop.fs.Path(idx2),
-      new org.apache.hadoop.fs.Path(idx2 + ".__swap_old")))
-    Similarity.appendToIvfIndex(odd, idx2)
-    assert(fsIdx.exists(new org.apache.hadoop.fs.Path(s"$idx2/centroids")),
-      "append must heal the crashed swap before writing")
+    fsIdx.delete(new org.apache.hadoop.fs.Path(missing), true)
+    val e = intercept[IllegalStateException] {
+      Similarity.appendToIvfIndex(odd, missing)
+    }
+    assert(e.getMessage.contains(s"no published version at staged artifact root $missing"),
+      e.getMessage)
+    assert(!fsIdx.exists(new org.apache.hadoop.fs.Path(missing)),
+      "a refused append must create nothing")
+    // …and an append arriving after a rebuild died before its
+    // _PUBLISHED marker lands in the still-live version, never in the
+    // torn one
+    intercept[RuntimeException] {
+      graft.io.Staging.publish(spark, idx2) { tmp =>
+        even.limit(1).write.parquet(s"$tmp/members")
+        throw new RuntimeException("rebuild died before publish")
+      }
+    }
+    val liveBefore = graft.io.Staging.resolveRead(spark, idx2)
+    val membersBefore = spark.read.parquet(s"$liveBefore/members").count()
+    Similarity.appendToIvfIndex(odd.limit(3), idx2)
+    assert(graft.io.Staging.resolveRead(spark, idx2) == liveBefore &&
+      spark.read.parquet(s"$liveBefore/members").count() == membersBefore + 3,
+      "append must land in the live version, not the torn rebuild")
   }
 
   test("winnowq: winnowing guarantee, edge cases, SQL surface") {

@@ -248,13 +248,19 @@ class SpanSketchSpec extends SparkSpec {
       // prebuilt answer must match the retrain-per-call one code-for-code
       assert(pre.map(r => (r.getAs[Long]("neighbor_id"), r.getAs[Long]("adc_dist"))).toSeq
         === fresh.map(r => (r.getAs[Long]("neighbor_id"), r.getAs[Long]("adc_dist"))).toSeq)
-      // reader self-heal: a rebuild that died between the swap renames
-      // leaves only `.old` — the prebuilt reader restores it and serves
-      // the pre-crash index instead of failing until the next build
-      val fsIdx = new org.apache.hadoop.fs.Path(idx)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(fsIdx.rename(new org.apache.hadoop.fs.Path(idx),
-        new org.apache.hadoop.fs.Path(idx + ".__swap_old")))
+      // crash-window availability: a rebuild that died before its
+      // _PUBLISHED marker, with the LATEST manifest lost too, leaves the
+      // prebuilt reader on the pre-crash version (the max published
+      // dir) instead of failing until the next build
+      val live = graft.io.Staging.resolveRead(spark, idx)
+      intercept[RuntimeException] {
+        graft.io.Staging.publish(spark, idx) { tmp =>
+          Seq((16, 16, 0)).toDF("m", "num_cells", "coarse_cells").write.parquet(s"$tmp/index_params")
+          throw new RuntimeException("rebuild died before publish")
+        }
+      }
+      graft.streaming.Streams.deleteDir(spark, s"$idx/LATEST")
+      assert(graft.io.Staging.resolveRead(spark, idx) == live)
       val healed = Pq.adcTopKPrebuilt(spark, idx, emb.filter(col("vec_id") === 7L), k = 5)
         .collect().sortBy(_.getAs[Int]("rank"))
       assert(healed.map(r => (r.getAs[Long]("neighbor_id"), r.getAs[Long]("adc_dist"))).toSeq
@@ -272,14 +278,14 @@ class SpanSketchSpec extends SparkSpec {
       // same-JVM purge) — the stamp mtime moves, so the previously
       // validated m=8 verdict is NOT reused and the drift fails loudly
       Seq((16, 16, 0)).toDF("m", "num_cells", "coarse_cells")
-        .coalesce(1).write.mode("overwrite").parquet(s"$idx/index_params")
+        .coalesce(1).write.mode("overwrite").parquet(s"$live/index_params")
       val e2 = intercept[IllegalArgumentException] {
         Pq.adcTopKPrebuilt(spark, idx, emb.filter(col("vec_id") === 7L), k = 5)
       }
       assert(e2.getMessage.contains("built with m=16"), e2.getMessage)
       // a stamp-less index (external / pre-stamp builder) names the
       // real remedy instead of a raw parquet path-not-found
-      graft.streaming.Streams.deleteDir(spark, s"$idx/index_params")
+      graft.streaming.Streams.deleteDir(spark, s"$live/index_params")
       val e3 = intercept[IllegalArgumentException] {
         Pq.adcTopKPrebuilt(spark, idx, emb.filter(col("vec_id") === 7L), k = 5)
       }

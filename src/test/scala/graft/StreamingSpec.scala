@@ -507,10 +507,11 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("concurrent engine streams isolate per-run provider and partition pins (the race the old lock guarded)") {
-    // one drain pinned heap, one pinned rocksdb, CONCURRENTLY on one
-    // session — under the old session-wide conf swap this interleaving
-    // could start a query on the wrong provider; with per-run clones
-    // each query's checkpoint must record ITS OWN pin. The offsets log
+    // two drains pinned to different partition counts, CONCURRENTLY on
+    // one session — under the old session-wide conf swap this
+    // interleaving could start a query on the wrong settings; with
+    // per-run clones each query's checkpoint must record the RocksDB
+    // provider and ITS OWN partition pin. The offsets log
     // persists the conf the query actually started with, so the
     // assertion reads the artifact Spark itself commits to.
     import scala.concurrent.{Await, Future}
@@ -523,25 +524,23 @@ class StreamingSpec extends SparkSpec {
       (1 to 6).map(i =>
         s"""{"entry_id":$i,"user_id":${i % 2},"ts_us":${i * 1000000},"pageview_count":1,"event_type":"view"}""")
         .mkString("\n").getBytes("UTF-8"))
-    def drain(ckpt: String, mode: String, parts: Int) =
+    def drain(ckpt: String, parts: Int) =
       Streams.runFileStream(spark, dir.toString, schema, ckpt,
         df => Streams.streamDedupKeys(df, Seq("user_id")),
-        stateStoreMode = Some(mode), shufflePartitions = Some(parts))
-    val fHeap = Future(drain(s"$base/ckptH", "heap", 2))
-    val fRocks = Future(drain(s"$base/ckptR", "rocksdb", 3))
-    assert(Await.result(fHeap, 5.minutes).count() == 2)
-    assert(Await.result(fRocks, 5.minutes).count() == 2)
+        shufflePartitions = Some(parts))
+    val f2 = Future(drain(s"$base/ckpt2", 2))
+    val f3 = Future(drain(s"$base/ckpt3", 3))
+    assert(Await.result(f2, 5.minutes).count() == 2)
+    assert(Await.result(f3, 5.minutes).count() == 2)
     def offsetsConf(ckpt: String): String =
       new String(java.nio.file.Files.readAllBytes(
         new java.io.File(s"$ckpt/offsets/0").toPath), "UTF-8")
-    val heapConf = offsetsConf(s"$base/ckptH")
-    val rocksConf = offsetsConf(s"$base/ckptR")
-    assert(heapConf.contains("HDFSBackedStateStoreProvider")
-      && heapConf.contains("\"spark.sql.shuffle.partitions\":\"2\""),
-      s"heap drain must start on its own pins:\n$heapConf")
-    assert(rocksConf.contains("RocksDBStateStoreProvider")
-      && rocksConf.contains("\"spark.sql.shuffle.partitions\":\"3\""),
-      s"rocksdb drain must start on its own pins:\n$rocksConf")
+    Seq(2 -> "ckpt2", 3 -> "ckpt3").foreach { case (parts, ckpt) =>
+      val conf = offsetsConf(s"$base/$ckpt")
+      assert(conf.contains("RocksDBStateStoreProvider")
+        && conf.contains(s"\"spark.sql.shuffle.partitions\":\"$parts\""),
+        s"the p$parts drain must start on RocksDB and its own partition pin:\n$conf")
+    }
   }
 
   test("concurrent foreachBatch drains (manifest ingest + bucketed upsert) share one session safely") {

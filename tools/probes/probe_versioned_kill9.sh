@@ -1,9 +1,9 @@
 #!/usr/bin/env bash
-# Fault-injection probe for graft.io.Staging.publishVersioned: kill -9 a
+# Fault-injection probe for graft.io.Staging.publish: kill -9 a
 # JVM mid-build (version dir written, _PUBLISHED never stamped) and
 # verify readers still resolve the previous published version, the torn
 # dir stays invisible and its number is never reused, and GC sweeps it.
-# The object-store-protocol twin of probe_swap_kill9.sh.
+# The staged-artifact twin of probe_swap_kill9.sh (the in-place table swap).
 # Run from the repo root: tools/probes/probe_versioned_kill9.sh
 set -u
 cd "$(dirname "$0")/../.."
